@@ -19,11 +19,17 @@ incoming batch are rewritten, an idempotent incremental load);
 ``replicate_truncate=True`` restores bug-for-bug truncate semantics.
 
 Partitioning rationale at scale: one directory per UTC date keeps
-partitions coarse (a day of beacon blocks ≈ 7200 rows × wide schema ≈
-manageable parquet files); all verify predicates filter on ``block_date``
-so Catalyst prunes to the touched dates (SURVEY §4 R1 caveat — filtering
-``DATE(block_timestamp)`` would prune nothing, hence the materialized
-partition column).
+partitions coarse (a day of beacon blocks is 7200 rows); all verify
+predicates filter on ``block_date``, so Catalyst prunes every partition
+outside the checked range (``block_date <= ds`` still reads all earlier
+history).  Filtering ``DATE(block_timestamp)`` would prune nothing, hence
+the materialized partition column (SURVEY §4 R1 caveat).
+
+Physical format: every writer here inherits the session's zstd
+compression and INT64 ``TIMESTAMP(MICROS)`` timestamps
+(:mod:`..session`); no writer sets a format option of its own.  Readers
+detect the format per file, so partitions written as snappy + INT96
+stay readable next to new ones.
 """
 
 from __future__ import annotations
@@ -78,8 +84,10 @@ def load_table(
     with ``start_epoch=None,end_epoch=None`` i.e. current full state), and
     write.  Returns the written DataFrame (pre-write plan) for chaining.
 
-    ``only_last_date`` uses a scalar-subquery max — one cheap extra job
-    over partition stats, not a full shuffle.
+    ``only_last_date`` keeps the rows of ``max(block_date)`` through a
+    broadcast left-semi join.  The aggregate and its broadcast run as two
+    jobs of their own before the write, so the load is three Spark jobs
+    where a plain load is one.  Both read the input, not partition stats.
     """
     if ts_col is None:
         df.write.mode("overwrite").parquet(dest_path)

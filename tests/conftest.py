@@ -17,7 +17,8 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="e2etl-tests", master="local[8]",
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "8"
+    s = build_session(app_name="e2etl-tests", master=f"local[{cpus}]",
                       shuffle_partitions=8)
     yield s
     s.stop()

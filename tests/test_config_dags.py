@@ -197,7 +197,7 @@ def test_load_dag_shape_and_wiring(stub_airflow):
     assert ids == ["load_beacon_blocks", "load_beacon_committees",
                    "load_beacon_validators", "send_email",
                    "verify_blocks_count", "verify_blocks_have_latest",
-                   "verify_committees_count", "verify_validators_count",
+                   "verify_committees_count",
                    "wait_latest_beacon_blocks",
                    "wait_latest_beacon_committees",
                    "wait_latest_beacon_validators"]
@@ -212,6 +212,9 @@ def test_load_dag_shape_and_wiring(stub_airflow):
     # load >> verify edges (build_load_dag.py:142-144)
     assert set(tasks["load_beacon_blocks"].downstream) == {
         "verify_blocks_count", "verify_blocks_have_latest"}
+    # validators_count is unwired, as in the reference: it cannot pass on
+    # a daily only_last_date snapshot whose epoch is above 0
+    assert tasks["load_beacon_validators"].downstream == []
     # all verifies feed the success email, an EmailOperator with the
     # configured recipients (O14, build_load_dag.py:134-144)
     assert tasks["verify_committees_count"].downstream == ["send_email"]
@@ -395,6 +398,38 @@ def test_hourly_load_dag_end_to_end(stub_airflow, spark, tmp_path):
     latest = read_latest_snapshot(spark, f"{warehouse}/beacon_validators_latest")
     assert latest.count() == 24
     assert latest.select("epoch").distinct().collect()[0]["epoch"] == 1
+
+
+def test_daily_validators_load_reads_ds_snapshot(stub_airflow, spark, tmp_path):
+    """The daily validators load reads ds's staged partition only, like
+    the reference (build_load_dag.py:88-90,127): a backfill of an older
+    ds loads that date's snapshot, not the newest one staged."""
+    from ethereum2_etl_airflow_spark.dags import build_load_dag
+    from ethereum2_etl_airflow_spark.sources.fixtures import gen_beacon_validators
+    from ethereum2_etl_airflow_spark.sources.ndjson import stage_export
+
+    staging, warehouse = str(tmp_path / "stage"), str(tmp_path / "wh")
+    # 9 epochs x 32 slots x 300 s is one day: epoch 0 is staged under
+    # 2024-01-01, epoch 9 under 2024-01-02
+    genesis, sps = 1704067200, 300
+    snaps = gen_beacon_validators(spark, 20, epoch=0, genesis=genesis,
+                                  secs_per_slot=sps).unionByName(
+        gen_beacon_validators(spark, 24, epoch=9, genesis=genesis,
+                              secs_per_slot=sps))
+    stage_export(snaps, staging, "beacon_validators", "timestamp")
+
+    cfg = read_load_config({"eth2_mainnet_output_bucket": "gs://bkt"})
+    dag = build_load_dag(cfg, spark_factory=lambda: spark,
+                         staging_root=staging, warehouse_root=warehouse)
+    load = next(t for t in dag.tasks if t.task_id == "load_beacon_validators")
+    load.python_callable(ds="2024-01-01")
+
+    out = spark.read.parquet(f"{warehouse}/beacon_validators")
+    assert out.count() == 20
+    assert [r["epoch"] for r in out.select("epoch").distinct().collect()] == [0]
+    assert [r["block_date"].isoformat()
+            for r in out.select("block_date").distinct().collect()] == [
+        "2024-01-01"]
 
 
 def test_hourly_export_dag_four_task_surface(stub_airflow):

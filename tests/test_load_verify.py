@@ -3,6 +3,9 @@ schema-enforced partitioned parquet → verify invariants pass/fail."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,6 +104,24 @@ def test_verify_fails_on_gaps(spark, tmp_path):
         "beacon_committees")
     with pytest.raises(Exception):
         run_check(spark, "committees_count", "2024-01-01")
+
+
+def test_verify_empty_range_raises(spark):
+    """With no rows dated <= ds, MAX is NULL, the aggregate condition is
+    not true, and the gapless checks still fail."""
+    later = gen_beacon_blocks(spark, 288, genesis=GENESIS, secs_per_slot=SPS)
+    derive_block_date(later, "block_timestamp").createOrReplaceTempView(
+        "beacon_blocks")
+    committees = gen_beacon_committees(spark, 9, genesis=GENESIS,
+                                       secs_per_slot=SPS)
+    derive_block_date(committees, "epoch_timestamp").createOrReplaceTempView(
+        "beacon_committees")
+    with pytest.raises(Exception) as ei:
+        run_check(spark, "blocks_count", "2023-12-31")
+    assert "not equal to last slot" in str(ei.value)
+    with pytest.raises(Exception) as ei:
+        run_check(spark, "committees_count", "2023-12-31")
+    assert "Epoch count mismatch in committees" in str(ei.value)
 
 
 def test_verify_fails_on_missing_latest(spark):
@@ -234,3 +255,97 @@ def test_write_partitioned_observed_metrics(spark, tmp_path):
     assert m["n_rows"] == n
     assert m["n_null_keys"] == 0
     assert (m["min_key"], m["max_key"]) == (0, n - 1)
+
+
+def _parquet_files(path):
+    return sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
+                            recursive=True))
+
+
+def test_load_writes_zstd_int64_micros(spark, staged, tmp_path):
+    """The warehouse format set in build_session: every column chunk is
+    ZSTD, and block_timestamp is INT64 TIMESTAMP(MICROS, UTC) with min/max
+    statistics (INT96 has none)."""
+    import pyarrow.parquet as pq
+
+    root, *_ = staged
+    df = read_ndjson(spark, f"{root}/export/beacon_blocks/*/*.json",
+                     beacon_schema("beacon_blocks"))
+    dest = str(tmp_path / "beacon_blocks")
+    load_table(spark, df, dest, "block_timestamp")
+    files = _parquet_files(dest)
+    assert files
+    for f in files:
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        i = pf.schema_arrow.get_field_index("block_timestamp")
+        col = pf.schema.column(i)
+        assert col.physical_type == "INT64"
+        lt = col.logical_type.to_json()
+        assert '"timeUnit": "microseconds"' in lt
+        assert '"isAdjustedToUTC": true' in lt
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            assert {rg.column(k).compression
+                    for k in range(rg.num_columns)} == {"ZSTD"}
+            stats = rg.column(i).statistics
+            assert stats is not None and stats.has_min_max
+
+
+def test_mixed_format_partitions_read_together(spark, tmp_path):
+    """A table written before the format change (snappy + INT96) takes a
+    dynamic overwrite in the new format; Spark, verify and DuckDB read
+    both partitions as one table."""
+    import duckdb
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    dest = str(tmp_path / "beacon_blocks")
+    blocks = derive_block_date(
+        gen_beacon_blocks(spark, 2 * 288, genesis=GENESIS, secs_per_slot=SPS),
+        "block_timestamp")
+    old_conf = {k: spark.conf.get(k) for k in (
+        "spark.sql.parquet.compression.codec",
+        "spark.sql.parquet.outputTimestampType")}
+    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        write_partitioned(blocks.where("block_date = DATE'2024-01-01'"), dest)
+    finally:
+        for k, v in old_conf.items():
+            spark.conf.set(k, v)
+    write_partitioned(blocks.where("block_date = DATE'2024-01-02'"), dest)
+
+    physical = {}
+    for f in _parquet_files(dest):
+        pf = pq.ParquetFile(f)
+        i = pf.schema_arrow.get_field_index("block_timestamp")
+        date = f.split("block_date=")[1][:10]
+        physical.setdefault(date, set()).add(
+            (pf.schema.column(i).physical_type,
+             pf.metadata.row_group(0).column(i).compression))
+    assert physical == {"2024-01-01": {("INT96", "SNAPPY")},
+                        "2024-01-02": {("INT64", "ZSTD")}}
+
+    out = spark.read.parquet(dest)
+    assert out.schema["block_timestamp"].dataType == TimestampType()
+    assert out.count() == 2 * 288
+    span = out.groupBy("block_date").agg(
+        F.min("block_timestamp").alias("lo"),
+        F.max("block_timestamp").alias("hi")).collect()
+    assert {r["block_date"].isoformat(): (r["lo"].isoformat(),
+                                          r["hi"].isoformat())
+            for r in span} == {
+        "2024-01-01": ("2024-01-01T00:00:00", "2024-01-01T23:55:00"),
+        "2024-01-02": ("2024-01-02T00:00:00", "2024-01-02T23:55:00")}
+    out.createOrReplaceTempView("beacon_blocks")
+    run_check(spark, "blocks_count", "2024-01-02")
+
+    con = duckdb.connect()
+    try:
+        n, = con.execute(
+            f"SELECT COUNT(*) FROM read_parquet('{dest}/*/*.parquet', "
+            "hive_partitioning = true)").fetchone()
+    finally:
+        con.close()
+    assert n == 2 * 288
