@@ -119,34 +119,12 @@ def main() -> None:
     # once per sf_dir (idempotent ensure_* helpers); doing it before the
     # timed window means the suite times the engine — the imposed-schema
     # scan, the pruned partition read, the streaming micro-batch — not
-    # one-off fixture writes
-    try:
-        from ethereum2_etl_airflow_spark.plans.checks_extension import (
-            ensure_ivf_index, ensure_pq_index, ensure_sessionize_source,
-            ensure_stream_join_outer_source)
-        from ethereum2_etl_airflow_spark.plans.checks_reference import (
-            ensure_avro_staged, ensure_csv_staged, ensure_evolved_staged,
-            ensure_ndjson_staged, ensure_orc_staged, ensure_overwrite_sink,
-            ensure_partition_staged, ensure_xml_staged)
+    # one-off fixture writes or index builds (the sim_pq_index /
+    # sim_ivf_index checks SERVE index artifacts built once per sf_dir)
+    from ethereum2_etl_airflow_spark.plans.registry import ensure_all
 
-        ensure_sessionize_source(spark, sf_dir)
-        ensure_stream_join_outer_source(spark, sf_dir)
-        # index artifacts are built once per sf_dir and SERVED by the
-        # sim_pq_index / sim_ivf_index checks — building here keeps
-        # one-time index I/O out of the first timed pass on a fresh box
-        ensure_pq_index(spark, sf_dir)
-        ensure_ivf_index(spark, sf_dir)
-        ensure_ndjson_staged(spark, sf_dir)
-        ensure_csv_staged(spark, sf_dir)
-        ensure_orc_staged(spark, sf_dir)
-        ensure_evolved_staged(spark, sf_dir)
-        ensure_partition_staged(spark, sf_dir)
-        ensure_overwrite_sink(spark, sf_dir)
-        ensure_xml_staged(spark, sf_dir)
-        ensure_avro_staged(spark, sf_dir)
-    except Exception as ex:
-        print(f"# bench warm-up fixture error: {str(ex).splitlines()[0][:120]}",
-              file=sys.stderr)
+    for err in ensure_all(spark, sf_dir):
+        print(f"# bench warm-up fixture error: {err}", file=sys.stderr)
 
     def make_runner(times: dict[str, float], per_thread_session=False):
         # Concurrent pass: one CHILD SESSION per pool thread

@@ -200,9 +200,8 @@ def local_frame(spark, rows, schema: str) -> DataFrame:
     every consumer re-execution then pays a full shuffle join of the
     big side (measured: bm25_topk 1.4 → 5 s, passage_extract 1.9 →
     10 s).  A 1-slice ``parallelize`` keeps the plain LogicalRDD plan
-    shape — hint intact — with one build task.  Use this for literal
-    frames that feed joins; plain ``createDataFrame(...).coalesce(1)``
-    stays fine for frames RETURNED as results (no hint to lose)."""
+    shape — hint intact — with one build task.  Use it for every small
+    literal frame, whether it feeds a join or is returned as a result."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(list(rows), 1), schema)
 

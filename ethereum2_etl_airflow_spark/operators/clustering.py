@@ -47,7 +47,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.layout import ensure_parallelism, finalize_release
+from ..functions.layout import (ensure_parallelism, finalize_release,
+                                local_frame)
 
 __all__ = ["kmeans_int", "kmeans_fit", "kmeans_fit_centroids",
            "kmeans_assign", "cluster_balanced_sample"]
@@ -179,9 +180,9 @@ def _assign_literal(qdf: DataFrame, cents: list[list[int]],
 
 
 def _centroid_df(spark, cents: list[list[int]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(r, [int(c) for c in cq]) for r, cq in enumerate(cents)],
-        "r int, cq array<bigint>").coalesce(1)
+    return local_frame(
+        spark, [(r, [int(c) for c in cq]) for r, cq in enumerate(cents)],
+        "r int, cq array<bigint>")
 
 
 def _seed_centroids(qdf: DataFrame, k: int,

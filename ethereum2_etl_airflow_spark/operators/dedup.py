@@ -783,7 +783,8 @@ def semantic_dedup(emb: DataFrame, n_cells: int = 8,
     shuffle); the quadratic GEMM is bounded by the largest cell.
     Sizing discipline: ``n_cells ∝ √N`` balances the N·n_cells
     assignment against the N²/n_cells GEMM at N^1.5 total — the FAISS
-    IVF rule (measured in ``tools/scale_probe.py --ann``).  The removal
+    IVF rule (the similarity/ANN scale-up table in ``docs/SCALE.md``;
+    ``tools/profile.py ... dedup_semantic`` re-measures it).  The removal
     is one distinct + one left-anti join on the id.
 
     ``refine_iters > 0`` replaces the raw md5-anchor cells with

@@ -17,6 +17,7 @@ Two tiers, mirroring how ANN is deployed at 100 TB:
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import numpy as np
@@ -766,8 +767,6 @@ def query_pq_index(spark, path: str,
     drop a corpus row from that query's top-k.  Pass True only when
     the query ids ARE corpus row ids (the :func:`pq_topk` situation —
     e.g. re-serving in-corpus queries from the stored index)."""
-    import math
-
     cb = sorted(spark.read.parquet(f"{path}/codebook").collect(),
                 key=lambda r: r["arank"])
     aqs = [list(r["aq"]) for r in cb]
@@ -933,24 +932,37 @@ def ann_ivf_exact_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
         corpus = cells.withColumn("cluster", F.expr(f"({b}).r"))
         # driver-side probe selection: d = Σ(qᵢ−cᵢ)² in exact Python
         # ints, sorted by (d, rank) — bit-for-bit the array_sort((d, r)
-        # struct) selection the in-plan probe expression computed
+        # struct) selection the in-plan probe expression computed,
+        # including its NULLs: a NULL query element, or zip_with's NULL
+        # padding of unequal lengths, makes d NULL, and NULL sorts first
+        def _probe_key(qq, cq, rank):
+            if None in qq or len(qq) != len(cq):
+                return (0, 0, rank)
+            return (1, sum((a - c) * (a - c) for a, c in zip(qq, cq)), rank)
+
         by_cell: list[list[tuple[int, list]]] = [[] for _ in cents]
         for r_ in sorted(qrows, key=lambda r: int(r["vec_id"])):
-            qq = [int(v) for v in r_["q"]]
-            ds = sorted((sum((a - c) * (a - c) for a, c in zip(qq, cq)),
-                         rank) for rank, cq in enumerate(cents))
-            for _d, cell in ds[:n_probe]:
+            qq = r_["q"]
+            ranked = sorted(range(len(cents)),
+                            key=lambda r: _probe_key(qq, cents[r], r))
+            for cell in ranked[:n_probe]:
                 by_cell[cell].append((int(r_["vec_id"]),
                                       list(r_["nv"])))
         # cluster → probing (query_id, qv) LUT as ONE folded literal
         # (the _cent_array_sql discipline: the array is the
         # element_at's input, so ConstantFolding collapses it to a
         # single object) — serving is a narrow Generate over the
-        # corpus cache: no join, no broadcast, no exchange.  Doubles
-        # print via repr (shortest exact round-trip) with the D suffix
-        # so the parser yields the identical IEEE value.
+        # corpus cache: no join, no broadcast, no exchange.  Finite
+        # doubles print via repr (shortest exact round-trip) with the D
+        # suffix so the parser yields the identical IEEE value; NaN and
+        # ±inf have no numeric literal and go through a string cast.
         def _d_lit(x) -> str:
-            return "CAST(NULL AS DOUBLE)" if x is None else f"{x!r}D"
+            if x is None:
+                return "CAST(NULL AS DOUBLE)"
+            if math.isfinite(x):
+                return f"{x!r}D"
+            return ("CAST('NaN' AS DOUBLE)" if math.isnan(x) else
+                    f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)")
 
         elem_t = "array<struct<query_id:bigint,qv:array<double>>>"
         cell_arrays = []
@@ -1050,7 +1062,8 @@ def mmr_topk(emb: DataFrame, query_ids: list[int], k: int = 8,
     cosines per query are driver integer/IEEE math on those rows
     (bit-identical to the SQL form), because MMR's sequential argmax is
     inherently k serial steps — k·s compares instead of k Spark jobs.
-    Returns (query_id, vec_id, rank) — rank 1..k in pick order."""
+    Returns (query_id, vec_id, rank) — rank 1..k in pick order — as
+    one partition (:func:`~..functions.layout.local_frame`)."""
     lam = lambda_milli / 1000.0
     qz = F.expr(
         f"transform({vec_col}, x -> CASE WHEN __m = 0D THEN 0L ELSE "
@@ -1097,8 +1110,6 @@ def mmr_topk(emb: DataFrame, query_ids: list[int], k: int = 8,
            .select("query_id", "vec_id", "cosine", "qv", "nsq"))
     sl_rows = slv.collect()
     z.unpersist()
-    import math
-
     rel: dict[int, dict[int, float]] = {}
     vecs: dict[tuple[int, int], tuple[list[int], int]] = {}
     for r in sl_rows:
@@ -1133,8 +1144,8 @@ def mmr_topk(emb: DataFrame, query_ids: list[int], k: int = 8,
             picked.append(best[1])
             del remaining[best[1]]
             out.append((qid, best[1], len(picked)))
-    return emb.sparkSession.createDataFrame(
-        out, "query_id long, vec_id long, rank long").coalesce(1)
+    return local_frame(emb.sparkSession, out,
+                       "query_id long, vec_id long, rank long")
 
 
 def ranking_eval(pred: DataFrame, truth: DataFrame, k: int = 10,
@@ -1169,8 +1180,6 @@ def ranking_eval(pred: DataFrame, truth: DataFrame, k: int = 10,
 
     Returns (query_col, n_truth, hits, recall_micro, mrr_micro,
     ndcg_micro) — one row per query with a non-empty truth set."""
-    import math
-
     disc = [0] + [int(1_000_000 / math.log2(i + 1))
                   for i in range(1, k + 1)]
     pdisc = [0]

@@ -441,8 +441,8 @@ def inverted_postings(docs, k: int = 8, text_col: str = "text",
     keeps the session width.  AQE is pinned off inside the scope and
     the eager materialization (``finalize_release``) happens INSIDE
     the pin so the pinned plan is the one that executes."""
-    from ..functions.layout import (finalize_release, local_frame,
-                                    pinned_shuffle, plan_width)
+    from ..functions.layout import (finalize_release, pinned_shuffle,
+                                    plan_width)
 
     with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
                         adaptive=False):
@@ -641,8 +641,8 @@ def bm25_topk(docs, queries: dict[int, list[str]], k: int = 10,
 
     Returns (query_id, doc_id, rank, score_milli), rank 1-based by
     (score desc, doc asc)."""
-    from ..functions.layout import (finalize_release, local_frame,
-                                    pinned_shuffle, plan_width)
+    from ..functions.layout import (finalize_release, pinned_shuffle,
+                                    plan_width)
 
     with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
                         adaptive=False):
@@ -749,8 +749,8 @@ def impact_postings(docs, k: int = 8, k1_milli: int = 1200,
 
     Runs pinned + materialized like :func:`bm25_topk` (round-9); plan
     tests assert on the lazy :func:`_impact_build`."""
-    from ..functions.layout import (finalize_release, local_frame,
-                                    pinned_shuffle, plan_width)
+    from ..functions.layout import (finalize_release, pinned_shuffle,
+                                    plan_width)
 
     with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
                         adaptive=False):
@@ -848,8 +848,8 @@ def bm25_topk_from_index(index, queries: dict[int, list[str]],
     ordering contract as :func:`bm25_topk`.  Pinned + materialized like
     the builder (the serving plan's two exchanges are bounded by
     |query terms|·cap rows, so the width floor always wins)."""
-    from ..functions.layout import (finalize_release, local_frame,
-                                    pinned_shuffle, plan_width)
+    from ..functions.layout import (finalize_release, pinned_shuffle,
+                                    plan_width)
 
     with pinned_shuffle(index.sparkSession, plan_width(index, floor=8),
                         adaptive=False):

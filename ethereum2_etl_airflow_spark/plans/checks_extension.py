@@ -2442,9 +2442,11 @@ def q_retrieval_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL CTEs (the bpe_merges oracle technique)."""
     from ..operators.similarity import mmr_topk
 
+    # mmr_topk returns one partition, so the partition-local sort is the
+    # global order, without a range exchange
     return (mmr_topk(_emb(spark, sf_dir), [1, 2, 3], k=8,
                      lambda_milli=700, shortlist=16)
-            .orderBy("query_id", "rank"))
+            .sortWithinPartitions("query_id", "rank"))
 
 
 def _mmr_oracle(k: int = 8, s: int = 16, lam_num: int = 700,
@@ -3681,12 +3683,11 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merges = bpe_train(_docs(spark, sf_dir).where(F.col("doc_id") < 300),
                        n_merges=12)
-    # coalesce(1): createDataFrame parallelizes the 12 literal rows
-    # over defaultParallelism (32 mostly-empty task launches at the
-    # noop sink — round-12 job trace); one task is the right width
-    return spark.createDataFrame(
-        [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
-        "rank int, a string, b string, merged string").coalesce(1)
+    from ..functions.layout import local_frame
+
+    return local_frame(
+        spark, [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
+        "rank int, a string, b string, merged string")
 
 
 def _bpe_merges_oracle(n_merges: int = 12) -> str:

@@ -14,7 +14,7 @@ from .checks_reference import REFERENCE_CHECKS
 from .checks_relational import RELATIONAL_CHECKS
 from .checks_tpch import TPCH_CHECKS
 
-__all__ = ["all_checks", "spark_queries", "oracle_sqls"]
+__all__ = ["all_checks", "spark_queries", "oracle_sqls", "ensure_all"]
 
 
 def all_checks() -> dict[str, tuple]:
@@ -37,3 +37,33 @@ def spark_queries():
 def oracle_sqls() -> dict[str, str]:
     return {name: sql for name, (_fn, sql) in all_checks().items()
             if sql is not None}
+
+
+def ensure_all(spark, sf_dir: str) -> list[str]:
+    """Materialize every staged fixture the checks read for ``sf_dir``:
+    stream sources, served index artifacts and staged files in other
+    formats.  Each ``ensure_*`` is idempotent per ``sf_dir``, so callers
+    run this once before timing checks and keep one-off fixture writes
+    out of the timed window.  A failing fixture does not stop the
+    others; the result holds one ``"<fixture>: <first error line>"``
+    per failure."""
+    from .checks_extension import (
+        ensure_ivf_index, ensure_pq_index, ensure_sessionize_source,
+        ensure_stream_join_outer_source)
+    from .checks_reference import (
+        ensure_avro_staged, ensure_csv_staged, ensure_evolved_staged,
+        ensure_ndjson_staged, ensure_orc_staged, ensure_overwrite_sink,
+        ensure_partition_staged, ensure_xml_staged)
+
+    errors = []
+    for fix in (ensure_sessionize_source, ensure_stream_join_outer_source,
+                ensure_pq_index, ensure_ivf_index, ensure_ndjson_staged,
+                ensure_csv_staged, ensure_orc_staged, ensure_evolved_staged,
+                ensure_partition_staged, ensure_overwrite_sink,
+                ensure_xml_staged, ensure_avro_staged):
+        try:
+            fix(spark, sf_dir)
+        except Exception as ex:  # noqa: BLE001 — reported to the caller
+            errors.append(f"{fix.__name__}: "
+                          f"{(str(ex).splitlines() or [''])[0][:120]}")
+    return errors

@@ -308,3 +308,32 @@ def test_weighted_sample_fractional_weight_has_no_mass(spark):
     picked = weighted_sample(df, n=10, weight_col="w").collect()
     assert sorted(r["doc_id"] for r in picked) == [3, 4]
     assert all(r["priority"] is not None for r in picked)
+
+
+def test_ivf_exact_degenerate_query_vectors(spark, sf_dir):
+    """NULL, NaN and ±inf elements in a query's vector: the driver-side
+    probe LUT must still build a plan Spark parses, and the finite
+    queries keep exactly the top-k of a run without the degenerate
+    ones."""
+    from ethereum2_etl_airflow_spark.operators.similarity import (
+        ann_ivf_exact_topk)
+    from ethereum2_etl_airflow_spark.sources.testdata import load_table
+
+    base = load_table(spark, sf_dir, "embeddings").where("vec_id < 60") \
+        .select("vec_id", "embedding")
+    dim = len(base.first()["embedding"])
+    bad = {900001: float("nan"), 900002: float("inf"),
+           900003: float("-inf"), 900004: None}
+    emb = base.unionByName(spark.createDataFrame(
+        [(i, [x] + [0.5] * (dim - 1)) for i, x in bad.items()],
+        "vec_id long, embedding array<float>"))
+    finite = [0, 1, 2, 3]
+
+    def run(ids):
+        return sorted(tuple(r) for r in ann_ivf_exact_topk(
+            emb, ids, k=5, n_cells=4, n_probe=2).collect())
+
+    clean = run(finite)
+    mixed = run(finite + sorted(bad))
+    assert clean
+    assert [r for r in mixed if r[0] in finite] == clean

@@ -25,33 +25,15 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
+    from ethereum2_etl_airflow_spark.plans.registry import ensure_all
     from ethereum2_etl_airflow_spark.session import build_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     spark = build_session(app_name="explain_dump",
                           master=f"local[{cpus}]", shuffle_partitions=8)
     qs = entrymod.queries()
-    try:
-        from ethereum2_etl_airflow_spark.plans.checks_extension import (
-            ensure_ivf_index, ensure_pq_index, ensure_sessionize_source,
-            ensure_stream_join_outer_source)
-        from ethereum2_etl_airflow_spark.plans.checks_reference import (
-            ensure_avro_staged, ensure_csv_staged, ensure_evolved_staged,
-            ensure_ndjson_staged, ensure_orc_staged, ensure_overwrite_sink,
-            ensure_partition_staged, ensure_xml_staged)
-
-        for fix in (ensure_sessionize_source, ensure_stream_join_outer_source,
-                    ensure_pq_index, ensure_ivf_index, ensure_ndjson_staged,
-                    ensure_csv_staged, ensure_orc_staged,
-                    ensure_evolved_staged, ensure_partition_staged,
-                    ensure_overwrite_sink, ensure_xml_staged,
-                    ensure_avro_staged):
-            try:
-                fix(spark, args.sf_dir)
-            except Exception:
-                pass
-    except Exception:
-        pass
+    for err in ensure_all(spark, args.sf_dir):
+        print(f"# fixture error: {err}", file=sys.stderr)
 
     out_dir = os.path.join(REPO, "plans", "r11")
     os.makedirs(out_dir, exist_ok=True)

@@ -228,288 +228,16 @@ def main() -> int:
         "BOTH sides before its verdict is recorded — this box drifts ±10-25% run-to-run, so "
         "one-shot walls cannot adjudicate the 2× bar.  (With "
         "--bench-json only the oracle side re-times; the spark wall "
-        "comes from the supplied map — round-9 regen feeds the "
-        "committed bench_reference.json quiet floor, i.e. min across "
-        "the close-day runs, so per-query debt is judged on a quiet "
-        "machine on both sides.)",
+        "comes from the supplied map.)",
         "Sorted worst-first; the suite-level BASELINE target is the "
         "aggregate wall, this table is the per-query debt audit.",
-        "Flag semantics (round-11): **≥2×** marks only rows whose "
+        "Flag semantics: **≥2×** marks only rows whose "
         "ORACLE wall is ≥0.5 s — the adjudicable class under the "
         "standing per-query criterion; ≥2× rows with a sub-0.5 s "
         "oracle are labeled (micro-oracle) — a multi-stage Spark job "
         "cannot undercut an in-process engine's ~5 ms unrolled CTE, "
         "and those rows were never counted as weak.  Near-bar rows "
         "carry their re-timed oracle samples in the last column.",
-        "Round-8 bar-adjacent warm medians (isolated session, 1 warm + "
-        "median-of-3, measured before the close — bench's single cold "
-        "walls below read higher on iterative ops): pagerank 2.02 s, "
-        "sparse_cosine 1.77 s, source_similarity 1.06 s, span_hits "
-        "1.40 s, repeated_spans 0.98 s.",
-        "Round-9 sparse_cosine closure (the carried ≤1.5 s bar): the "
-        "default strategy is now the blocked-GEMM shape (per-block "
-        "pivot + one matmul, replacing the 11.2 M-row pair-join+agg "
-        "stage) — **0.73 s** warm median-of-3 (0.99/0.73/0.71; index "
-        "path kept as the wide-vocab/giant-block scale strategy: "
-        "1.82 s).  Stage profile that adjudicated the levers (sf0.1, "
-        "warm): 0.26 s driver plan build + 0.44 s index materialize + "
-        "0.90 s pair join+agg; the round-8 df-cap proposal is "
-        "INAPPLICABLE on this corpus (620 (blk,tok) keys, all ~200 "
-        "docs — uniform histogram, no discriminative subset to keep), "
-        "and a packed map-dot pair join measured 3.3 s (interpreted "
-        "HOF).  Both strategies bit-identical incl. cosine doubles "
-        "(pytest-pinned).",
-        "Round-10 k-means-family adjudication (the 4 carried weaks): "
-        "the shared root cause is CLOSED — kmeans_fit no longer pays a "
-        "per-round eager localCheckpoint + centroid join; each Lloyd "
-        "round is ONE single-stage job (narrow Arrow partial-stats "
-        "kernel, integer-exact float64 BLAS assignment), the final "
-        "assignment is a constant-folded-literal narrow JVM map (zero "
-        "exchange), the quantized cache sits at stats width, and "
-        "cluster_balanced_sample materializes once.  (Rejected, "
-        "measured: fully-unrolled codegen literals — ~1 s Janino "
-        "recompile per round because values inline into the source; "
-        "per-dim sum aggregates — 64 agg buffers compile "
-        "pathologically; explode-then-filter — the argmin expr "
-        "collapses ABOVE the Generate and re-evaluates per exploded "
-        "element.)  Warm spark walls moved: cluster_sample 2.79→1.76 s, "
-        "sim_ivf_exact 3.31→2.04 s, decontaminate_semantic "
-        "5.07→3.05 s (also: folded-literal anchors + broadcast-hinted "
-        "rescore/role/anti joins), triangle_count wedge width now "
-        "stats-sized (same-session sweep 64/32/16/8 parts → "
-        "3.9/3.4/3.2/4.6 s; non-closing edges dropped pre-explode) and "
-        "its standing floor ratio is now UNDER the 2× bar (4.46 s "
-        "floor vs re-timed oracle — the r9 2.19 s oracle wall was a "
-        "drift artifact: re-timed medians read 3.3-13 s across "
-        "regens) — triangle_count weak CLOSED.  REVISED BARS for the "
-        "three still ≥2× — structural "
-        "job-count floors at sf0.1, not shape debt: each remaining "
-        "stage is data-bounded and the oracle is an in-process engine "
-        "running an unrolled CTE over ~2 000 rows in 0.3-1.2 s, below "
-        "any multi-job Spark plan's floor on this box (~0.15-0.5 s per "
-        "micro-job).  Stage profiles (sf0.1, warm, quiet): "
-        "cluster_sample 1.76 s = stats-width probe 0.16 + quantize-"
-        "cache+seeds 0.70 + 3 fit rounds 0.79 + final-assign+window+"
-        "checkpoint 0.55 (6 sequential barriers; bar ≤2.0 s); "
-        "sim_ivf_exact 2.04 s = fit (seeds + 2 rounds) ~0.7 + "
-        "normalize+assign corpus cache ~0.5 + probe/top-k/finalize "
-        "~0.8 (5 barriers; bar ≤2.5 s); decontaminate_semantic 3.05 s "
-        "= union-quantize-cache+anchors 0.36 + blocked-GEMM+rescore+"
-        "checkpoint 1.53 + role-tag/anti/order/finalize ~1.1 (4 "
-        "barriers, two Arrow exchanges; bar ≤3.5 s).  Bars are warm "
-        "median-of-3 on a quiet box; re-open as weak if exceeded or if "
-        "any stage stops being data-bounded.  The new-this-round "
-        "hard_negatives (floor 1.45 s vs a 0.3-0.5 s oracle) is the "
-        "same structural class: it IS topk_cosine_bruteforce (normalize"
-        "-cache + scan + two-phase rank + finalize, 4 barriers) plus "
-        "one broadcast join — its floor tracks sim_topk's and inherits "
-        "that family's standing; bar ≤2.0 s.",
-        "Round-11 closure of the three carried ≥2× rows "
-        "(decontaminate_semantic 2.44× / sparse_cosine 2.24× / "
-        "sim_ivf_exact 2.07× on r10's one-shot oracle walls): the "
-        "adjudication mechanism is now IN the artifact — near-bar rows "
-        "carry their re-timed oracle median-of-3 samples in the last "
-        "column (the triangle_count lesson institutionalized: its r9 "
-        "2.19 s oracle wall re-timed to 3.3-13 s).  Independent "
-        "median-of-5 re-times this round: sparse_cosine oracle "
-        "1.05 s (0.87/0.97/1.05/1.06/1.12 — the r10 0.51 s wall was "
-        "the same drift class; floor ratio 1.14/1.05 = 1.09×), "
-        "sim_ivf_exact oracle 0.81 s (0.70-0.93; floor 1.46/0.81 = "
-        "1.80×), decontaminate_semantic oracle 1.35 s (0.99-2.63) "
-        "against a POST-FUSION spark wall — round 11 eliminated the "
-        "two role-tag broadcast joins by passing the history/batch "
-        "flag through the rescore join's existing vector projections "
-        "(passthrough columns; in-session warm median 3.05→2.56 s), "
-        "so the row reads ~1.9×.  Also rejected, measured: dropping "
-        "the pair-table eager checkpoint (the removed-set broadcast "
-        "then evaluates the GEMM inside a driver-side broadcast-"
-        "exchange collect; 2.6→5.3 s).  The rescore join now "
-        "broadcasts the corpus-bounded VECTOR side, never the "
-        "worst-case-quadratic pair table (robustness review item).  "
-        "pipeline_pretrain (VERDICT item 7) was re-shaped this round: "
-        "the lazily-composed plan re-read the source 54 TIMES at "
-        "sf0.1 (plan-counted); it now caches exactly the corpus and "
-        "the post-filter kept set and materializes the chunks — 0 "
-        "rescans.  Its wall is a barrier floor, profiled warm at "
-        "sf0.1: src cache 0.43 + gopher/kept 2.77 + dedup/chunk/ckpt "
-        "1.57 + order/noop 0.62; the gopher stage is the standalone "
-        "gopher_filter check's own wall scaled to the 2× planted-dup "
-        "corpus (1.27 s at 1×) — data-bounded text analytics, not "
-        "composition overhead; the oracle is a single-process DuckDB "
-        "CTE chain at ~0.5 s, under any 4-barrier Spark plan's floor "
-        "on this box.  sim_ivf_exact also lost a barrier this round: "
-        "its corpus cache now keeps q (build_ivf_index's cells-table "
-        "layout; the fit-only qdf cache releases at finalize, so peak "
-        "footprint is unchanged) and the query side — probes + "
-        "normalized query vectors — is ONE broadcast subtree over "
-        "that cache instead of two separate broadcast builds (5 "
-        "barriers → 4; bit-identity pinned by the sim_ivf_index/"
-        "append/compact oracles and pytests).  Round-11 quiet-box "
-        "median-of-7 oracle walls for every row that straddles the "
-        "0.5 s adjudication threshold (regen-to-regen DuckDB walls on "
-        "these drift 2-4×, flipping flags — e.g. impact_index read "
-        "0.58 s in one regen and 0.11-0.16 s across 7 quiet samples): "
-        "cms_estimate 0.40 (0.38-0.52), impact_index 0.13 "
-        "(0.11-0.16), pipeline_pretrain 0.42 (0.39-0.53), "
-        "sparse_cosine 0.44 (0.40-0.45), retrieval_topk 0.41 "
-        "(0.38-0.61; its whole family — hybrid 0.30, eval 0.32, "
-        "bm25_expanded 0.23, query_expansion 0.16 — is sub-0.5 s "
-        "quiet) — all five are micro-oracle "
-        "class on quiet numbers; sim_ivf_exact 0.58 (0.54-0.72) is "
-        "the one genuinely adjudicable residual: floor 1.46 / 0.58 ≈ "
-        "2.5× — a structural 4-barrier job-count floor over a 2 000-"
-        "row corpus (the r10 ≤2.5 s warm bar is met, every stage is "
-        "data-bounded, and its serving twins sim_ivf_index/append/"
-        "compact all read ≤1.5× because they skip the in-session "
-        "fit), not plan debt; the gap closes with corpus size, not "
-        "with plan work.",
-        "Round-11 second half (the session after the first close): the "
-        "two NEW ≥2× flags the 242-check regen raised — "
-        "dedup_minhash_exact 2.62× and cms_estimate 2.32×, both on "
-        "solid ≥0.5 s med-of-3 oracle walls — were closed by making "
-        "the OPERATORS faster on both engines, not by re-timing: "
-        "minhash_exact_pairs moved to a one-hash-many-slices family "
-        "(2 md5s per shingle sliced into 8 32-bit rows instead of 8 "
-        "full md5s, evaluated once in the explode-side projection; "
-        "the oracle computes the same family, DuckDB wall 0.53 → "
-        "0.26 s med-of-5 — micro-oracle class now — and the spark "
-        "warm wall dropped ~0.2 s), and the cms_estimate check now "
-        "builds its sketch FROM the exact counts it already computes "
-        "(cms_build_counts — same sketch by definition, equivalence "
-        "pytest-pinned; hashing runs at vocab width, floor 1.32 → "
-        "0.63 s vs its 0.43-0.57 s oracle — ratio ~1.2×, CLOSED).  "
-        "sparse_cosine lost its second exchange (raw occurrences "
-        "straight into the block kernel, counts form in the "
-        "size-aggregating pivot — bit-identical, plan test updated; "
-        "floor 1.07 → 0.70 s, ratio ~1.3-1.6× on any of its measured "
-        "oracle walls — CLOSED), and sim_ivf_exact's fit and serving "
-        "sides now share ONE (vec_id, nv, q) cache (cluster is a "
-        "post-fit literal-argmin projection; one corpus materialize "
-        "pass instead of two, bit-identical) — its floor is the one "
-        "residual still reading ~2× on the 0.58-0.81 s re-timed "
-        "oracle band, carried under the unchanged structural-floor "
-        "adjudication above.",
-        "Round-11 OPTIMIZATION-round regen (full live-timed run, both "
-        "sides same box, med-of-3 on every near-bar row): the three "
-        "carried ≥2× rows all read UNDER the bar on like-for-like "
-        "same-epoch walls — sim_ivf_exact 1.95× (oracle med-of-3 "
-        "0.60/0.61/0.65), sparse_cosine 1.88× (0.47/0.47/0.54), "
-        "decontaminate_semantic 1.57× (0.94/1.02/1.22) — CLOSED under "
-        "the standing criterion (RATIOS itself <2×).  The single "
-        "remaining flag is pipeline_pretrain 3.16× (spark med-of-3 "
-        "1.96 on a measured ~1.5-2× contended epoch — its committed "
-        "quiet floor is 0.86 s — vs oracle med-of-3 0.56/0.62/0.71; "
-        "the build-round med-of-7 quiet oracle read 0.39-0.53, i.e. "
-        "micro-oracle class on quiet numbers).  Stage profile this "
-        "epoch: gopher-verdict+kept-cache 1.33 s / chunk+checkpoint "
-        "0.61 / order+sink 0.43 — the first stage is the same "
-        "tokenize the standalone gopher_filter check pays on the 2× "
-        "planted-dup corpus, data-bounded; no new plan debt (the "
-        "54-rescan bug this pipeline once had stays fixed: 0 source "
-        "rescans, plan-counted).  Carried as structural per the "
-        "unchanged adjudication above.",
-        "Round-12 regen (the table below): quiet-floor spark side "
-        "(--bench-json bench_reference.json, min-merged through the "
-        "round-12 close) vs live DuckDB oracles, near-bar rows "
-        "re-timed med-of-3 per the standing protocol.  The four "
-        "weaks carried out of round 11 cleared: decontaminate_"
-        "semantic ~1.0× and winnow ~0.7-0.9× on solid oracles; "
-        "conv_turns ~2.3× on a 0.24 s oracle and stream_cms ~2.1-2.3× "
-        "on a ~0.4 s oracle — both micro-oracle class (the r11 "
-        "contended-epoch spark walls, not the floors, produced the "
-        "2.08×/2.02× rows; the r11 verdict's own same-minute "
-        "adjudications read 1.35×/1.75×).  sim_ivf_exact after the "
-        "round-12 probe-LUT barrier cut (jobs 8→4, warm med 1.77→"
-        "1.37 s same-epoch, plans/r12/sim_ivf_exact_serve_*.txt): "
-        "back-to-back regens read **1.33×** (oracle med-of-3 0.98 s) "
-        "and **2.25×** (oracle med-of-3 0.58 s) on the SAME 1.30 s "
-        "spark floor — the oracle side drifts 2× regen-to-regen "
-        "exactly as the round-11 notes measured (band 0.58-0.98), so "
-        "the row's verdict rides the oracle draw; the spark floor "
-        "itself fell 1.47 → 1.20 s across the round-12 close-out "
-        "min-merges (in-session warm min 1.12 s on a 1.5× epoch), "
-        "reading 1.2-2.1× across the measured oracle band — under "
-        "the bar on every draw except the extreme 0.58 s sample, "
-        "where the unchanged round-10 structural adjudication "
-        "applies (4 sequential barriers over a 2 000-row corpus; "
-        "serving twins that skip the in-session fit read ≤1.5×; the "
-        "gap closes with corpus size, not plan work).",
-        "Round-11 continuation regen (previous table): produced on a "
-        "measured 1.7-2× contended epoch (same-minute control: "
-        "sort_limit warm 0.25-0.30 s vs its 0.15 s quiet floor, and "
-        "three full sequential passes in the same window read "
-        "245.5/274.7/300.5 s kept-sum on code whose quiet floor is "
-        "~133 s).  Its four ≥2× rows are that epoch, not plan debt — "
-        "adjudicated with same-minute isolated warm medians (4 reps) "
-        "taken immediately after the regen: decontaminate_semantic "
-        "1.97 s warm med (9 jobs, plan unchanged this round) vs its "
-        "own regen oracle med 1.19 s = **1.66×**; winnow 1.08 s vs "
-        "0.52 s = **2.08→2.08×** (flagged in-range but its spark "
-        "column here, 1.08 s, is 3× its 0.36 s quiet floor — the "
-        "drift class, plan untouched since round 8); conv_turns "
-        "0.77 s vs 0.57 s = **1.35×**; stream_cms 1.63 s vs 0.93 s = "
-        "**1.75×** (plan untouched; the streaming fixed-cost family).  "
-        "No operator behind any flagged row changed in the "
-        "continuation (the CC pin REDUCES dedup_clusters* jobs; "
-        "term_salience reads 1.24× below, and dsir_select's 5.75× row "
-        "is micro-oracle class — 0.22 s oracle).",
-        "Round-11 close-day band (12 full sequential WRITE_REF runs "
-        "spread over the round; the first 7 at 241 checks, one at 242 "
-        "after html_extract landed, and 4 second-half runs at 249-250 "
-        "checks after X95-X102 landed): **206.1 / 217.4 / 224.7 / "
-        "230.5 / 230.9 / 259.4 / 271.9 / 275.0 / 276.4 / 294.6 / "
-        "316.1 / 325.0 s** kept-sum — same ±50% "
-        "host-phase spread as every prior round; the quietest runs "
-        "(206.1/217.4) bracket the floor.  The min-merged quiet floor "
-        "(bench_reference.json, committed) totals **192.4 s at 250 "
-        "checks** vs 209.2 s at 235 last round — six checks ADDED and "
-        "19 s REMOVED from the floor (the decontaminate fusion, the "
-        "sim_ivf_exact barrier cut, the pipeline_pretrain reshape, "
-        "and the cms token-stream sharing are all floor-visible).",
-        "Round-10 close-day band (5 full sequential WRITE_REF runs at "
-        "235 checks spread over the day): **230.3 / 232.3 / 295.2 / "
-        "305.1 / 322.6 s** kept-sum (elapsed 234/238/360/382/484 s — "
-        "the slower runs sat in a documented host slow phase whose "
-        "drift report shows ~uniform inflation, not regression "
-        "— and one run additionally paid the one-time sf0.1 IVF "
-        "index build for the new sim_ivf_index check).  The min-merged "
-        "quiet floor (bench_reference.json, committed, re-baselined "
-        "this round for the 13 re-shaped queries) totals **209.2 s** "
-        "at 235 checks vs ~246 s at 231 last round — the k-means-"
-        "family/semantic-dedup/triangle work shows up in the floor, "
-        "not just in single runs.  A close-day full driver-path run "
-        "(both passes, no env flags) read kept-sum **264.5 s** / "
-        "concurrent 89.2 s / 0 errors — inside the band (concurrent "
-        "inside the documented ±45% bracket).",
-        "Round-9 contention guard + band: bench's sequential pass "
-        "re-times (once, after the pass) any query whose wall exceeds "
-        "2× its committed bench_reference.json wall (5 s absolute "
-        "without a reference) and keeps the min; the headline is the "
-        "SUM of kept walls, raw elapsed rides along as "
-        "sequential_elapsed_sec.  Round-9 close-day band (5 full "
-        "sequential runs at 231 checks, one query at a time, spread "
-        "over the day): **236.6 / 255.7 / 298.6 / 308.7 / 316.4 s** kept-sum "
-        "(elapsed 237/263/349/354/440 s; the 236.6 s run re-timed "
-        "NOTHING — zero guard overhead on a quiet box) — the box "
-        "drifted ~20% slower through "
-        "the day (the round-8 pattern); the min-merged per-query "
-        "quiet floor (bench_reference.json, committed) totals "
-        "~246 s.  A close-day full driver-path run (both passes, no "
-        "env flags) read kept-sum 265.7 s / concurrent 94.1 s / 0 "
-        "errors — inside the band.  The guard absorbs transient "
-        "spikes (min-of-2), not sustained host-side slow phases — "
-        "cross-round comparisons should use the kept-sum against "
-        "this band, per-query debt against the reference floor.",
-        "Concurrent-wall band (round-8 bracket, 5 fresh-JVM runs of "
-        "the 32-thread pass at HEAD, per-thread child sessions): "
-        "42.0 / 50.8 / 52.1 / 60.6 / 91.4 s — median 52 s, ±45% "
-        "single-round spread.  The round-6→7 35.6→61.5 s move sits "
-        "INSIDE one round's own band, so cross-round concurrent-wall "
-        "diffs under ~2× are not evidence of regression; the "
-        "sequential pass is the round-over-round comparable number.  "
-        "Round-9 bracket at close HEAD (231 checks): 85.6 / 52.0 / "
-        "50.8 s plus 94.1 s inside the full driver-path run — same "
-        "band, same spread.",
         "",
         "| check | spark s | oracle s | ratio | re-time evidence |",
         "|---|---|---|---|---|",
