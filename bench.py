@@ -1,55 +1,34 @@
-"""Benchmark harness — times every registered check query.
+"""Benchmark harness: times every registered check.
 
-Runs each ``__spark_entry__.queries()`` entry at ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``.
+    SPARK_GRAFT_SF_DIR=DIR python bench.py
 
-Output contract (driver-parseable): the LAST stdout line is one compact
-headline JSON object — {"metric", "value", "unit", "sf", "cpus",
-"concurrent_wall_sec", "sequential_wall_sec", "n_queries", "n_errors"}.
-The sequential per-query map at 2 dp (the round-over-round comparable
-numbers) prints on EARLIER stdout lines as short self-labeled chunks
-{"pass": "sequential", "part": i, "of": n, "queries": {...}} — each
-line ≤ ~450 chars so complete lines survive the driver's 2000-char
-stdout-tail capture and parse individually (the single 252-entry map
-line truncated mid-map in rounds 10-11 and the driver's per-query
-comparison ran empty).  Chunks are ordered by ascending wall so the
-slowest queries sit nearest the headline.  Nothing may print after the
-headline: the contention-inflated concurrent per-query map goes to a
-sidecar file (bench_concurrent.json, self-labeled
-{"pass": "concurrent"}) rather than stdout.  Round 2 lost its official
-number to one giant first line; round 3 lost it again by printing the
-headline FIRST while the driver kept the tail — headline LAST is the
-contract that matches the capture.
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (default: every core) over the sf
+directory ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data), after
+the registry's fixture bootstrap (``plans.registry.ensure_all``).
 
-Round-9 contention robustness: the sequential pass re-times (once,
-after the pass, deterministic rule — see run_sequential) any query
-whose wall exceeds 2x its committed quiet-machine reference
-(bench_reference.json) and keeps the min; the headline "value" /
-"sequential_wall_sec" is the SUM of kept per-query walls (raw elapsed
-including re-times rides along as "sequential_elapsed_sec").  This is
-what makes the official artifact land inside the recorded same-HEAD
-band even when the driver's single pass hits box contention (round-8:
-+58% from exactly that).
+Sequential pass: ``tools/profile.py``'s ``profile()`` over the
+``sort_limit`` control and then every other check in name order.  Each
+check runs once cold and three times warm to the noop sink, with a gc
+and a cache clear before every run, and yields one record: cold wall,
+warm median, jobs, stages, tasks, shuffle/spill/Python bytes, stream
+batches and driver time.  The headline ``value`` is the sum of the warm
+medians; the cold sum and the control's warm median ride along.
 
-Queries are submitted with bounded concurrency: Spark's scheduler is
-designed to share executors across concurrent jobs, so independent
-queries pipeline through the same task slots — this is the engine's
-natural batch-throughput mode, matching how a 1000-executor cluster runs
-a verification suite.  ``value`` is the elapsed wall clock for the whole
-suite; per-query numbers under ``queries`` are each query's own
-start→end inside the concurrent run (their sum exceeds the wall clock
-and slot contention confounds them), so the artifact ALSO carries a
-``queries_sequential`` pass — one query at a time, full machine each —
-which is the number to diff round-over-round for per-query regressions.
+Concurrent pass (after the sequential one): one pool thread per core
+(at most 32), FAIR scheduling and one child session per thread, so one
+check's session-scoped conf pins never re-plan another's.  Checks are
+submitted longest-first by their measured warm median, so the heavy
+ones start at once and the makespan tracks total work.
 
-Env knobs: SPARK_GRAFT_BENCH_SEQUENTIAL=1 → sequential pass only;
-SPARK_GRAFT_BENCH_SKIP_SEQUENTIAL=1 → concurrent pass only (fast
-iteration); SPARK_GRAFT_BENCH_THREADS=N → concurrency override;
-SPARK_GRAFT_BENCH_ONLY=a,b,c → restrict to the named queries (output
-contract smoke-testing).
-
-Each query is forced with a noop sink (full execution, no driver
-collection cost) after a session warm-up.
+Output:
+- ``bench_sequential.json``: the full ``{name: warm_med_s}`` map and
+  every profile record;
+- ``bench_concurrent.json``: the concurrent pass's per-check walls
+  (they share task slots, so they are not comparable run to run);
+- stdout, in order: one ``{"pass":"sequential","queries":{...}}`` line
+  of at most 1500 chars holding the slowest checks at 2 dp, then the
+  headline JSON as the last line.  Nothing prints after the headline:
+  a reader that keeps only the tail of stdout gets both lines whole.
 """
 
 from __future__ import annotations
@@ -63,367 +42,134 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+PROTOCOL = "warm-median-of-3"
+REPS = 3
+LEGACY_LINE_CHARS = 1500
+
+
+def _compact(obj) -> str:
+    return json.dumps(obj, separators=(",", ":"))
+
+
+def warm_times(records: list[dict]) -> dict[str, float]:
+    """``{check: warm_med_s}`` for every record that did not error."""
+    return {r["check"]: r["warm_med_s"] for r in records if "error" not in r}
+
+
+def report(records: list[dict], conc_times: dict[str, float],
+           conc_wall: float | None, sf: float | None, cpus: int,
+           seq_elapsed: float | None = None) -> list[str]:
+    """The stdout lines: the compact per-check map of the slowest
+    checks, then the headline."""
+    warm = warm_times(records)
+    queries: dict[str, float] = {}
+    for name, t in sorted(warm.items(), key=lambda kv: (-kv[1], kv[0])):
+        more = {**queries, name: round(t, 2)}
+        if len(_compact({"pass": "sequential", "queries": more})) \
+                > LEGACY_LINE_CHARS:
+            break
+        queries = more
+    errors = {r["check"] for r in records if "error" in r} | \
+        {n for n, t in conc_times.items() if t < 0}
+    seq_wall = round(sum(warm.values()), 3)
+    headline = {"metric": "wall_sec_all_checks_sequential", "value": seq_wall,
+                "unit": "sec", "protocol": PROTOCOL, "sf": sf, "cpus": cpus,
+                "concurrent_wall_sec": conc_wall,
+                "sequential_wall_sec": seq_wall,
+                "sequential_elapsed_sec": seq_elapsed,
+                "cold_sum_sec": round(sum(r["cold_s"] for r in records
+                                          if "error" not in r), 3),
+                "control_s": warm.get("sort_limit"),
+                "n_queries": len(records), "n_errors": len(errors)}
+    return [_compact({"pass": "sequential", "queries": queries}),
+            json.dumps(headline)]
+
+
+def run_concurrent(spark, qs, order: list[str], sf_dir: str,
+                   nthreads: int) -> tuple[dict[str, float], float]:
+    """Every check in ``order`` through a pool of ``nthreads`` threads,
+    each on its own child session (same SparkContext, own SQLConf).
+    Returns per-check walls (-1.0 for an error) and the pass wall."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    tl = threading.local()
+    times: dict[str, float] = {}
+
+    def run_one(name: str) -> None:
+        if not hasattr(tl, "spark"):
+            tl.spark = spark.newSession()
+        t0 = time.perf_counter()
+        try:
+            qs[name](tl.spark, sf_dir).write.mode("overwrite") \
+                .format("noop").save()
+            times[name] = round(time.perf_counter() - t0, 3)
+        except Exception as ex:  # a failing check must not hide the rest
+            print(f"# bench error {name}: {str(ex).splitlines()[0][:120]}",
+                  file=sys.stderr)
+            times[name] = -1.0
+
+    t0 = time.perf_counter()
+    with ThreadPoolExecutor(max_workers=nthreads) as pool:
+        list(pool.map(run_one, order))
+    return times, round(time.perf_counter() - t0, 3)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    import __spark_entry__ as entrymod
+    from ethereum2_etl_airflow_spark.plans.registry import (
+        ensure_all, spark_queries)
     from ethereum2_etl_airflow_spark.session import build_session
+    from tools.profile import profile
 
-    # Small-SF tuning: the suite's shuffles are tiny, so a low fixed
-    # partition count avoids per-task overhead dominating; on a real
-    # cluster the session default (2-3x total cores + AQE coalescing)
-    # applies instead.
-    # FAIR job scheduling: with FIFO, a long multi-stage job at the head
-    # of the queue (streaming micro-batches, iterative KMeans) holds every
-    # task slot while later queries starve; FAIR round-robins slots across
-    # the 8 concurrent queries, so the suite's makespan tracks total work
-    # rather than the worst head-of-line chain.
+    # FAIR scheduling: under FIFO a long multi-stage job at the head of
+    # the queue (streaming micro-batches, iterative k-means) holds every
+    # task slot of the concurrent pass while later checks starve
     spark = build_session(app_name="bench", master=f"local[{cpus}]",
                           shuffle_partitions=8,
                           extra_conf={"spark.scheduler.mode": "FAIR"})
-
-    qs = entrymod.queries()
-    # Pre-import pyspark.ml in the MAIN thread: the ANN/minhash operators
-    # import it lazily, and two pool threads importing pyspark.ml.wrapper
-    # concurrently can observe a partially-initialized module (observed:
-    # "cannot import name 'JavaParams' ... circular import").
+    # pyspark.ml is imported lazily by the ANN/minhash operators; two pool
+    # threads importing pyspark.ml.wrapper at once can see a partially
+    # initialized module, so import it here in the main thread
     import pyspark.ml.clustering  # noqa: F401
     import pyspark.ml.feature  # noqa: F401
     import pyspark.ml.functions  # noqa: F401
 
-    # warm up JVM/JIT + parquet footers with one representative query
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    try:
-        qs["q1_pricing"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    except Exception:
-        pass
-    # tiny-graph warm-up: the heavy-first order puts the graph batch at
-    # the head of both passes, so they'd otherwise pay the one-time
-    # broadcast/shuffle_hash/codegen machinery cost (~2.5 s measured);
-    # a 4-edge graph compiles those paths without touching suite data
-    try:
-        from ethereum2_etl_airflow_spark.operators.graph import (
-            triangle_counts)
-        tiny = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)],
-                                     "id_a long, id_b long")
-        triangle_counts(tiny, assume_canonical=True, broadcast_degrees=True,
-                        wedge_partitions=4) \
-            .write.mode("overwrite").format("noop").save()
-    except Exception:
-        pass
-    # fixture setup, not query work: staging fixtures are materialized
-    # once per sf_dir (idempotent ensure_* helpers); doing it before the
-    # timed window means the suite times the engine — the imposed-schema
-    # scan, the pruned partition read, the streaming micro-batch — not
-    # one-off fixture writes or index builds (the sim_pq_index /
-    # sim_ivf_index checks SERVE index artifacts built once per sf_dir)
-    from ethereum2_etl_airflow_spark.plans.registry import ensure_all
-
+    # fixture writes and index builds stay out of the timed window
     for err in ensure_all(spark, sf_dir):
         print(f"# bench warm-up fixture error: {err}", file=sys.stderr)
 
-    def make_runner(times: dict[str, float], per_thread_session=False):
-        # Concurrent pass: one CHILD SESSION per pool thread
-        # (spark.newSession() — same SparkContext/executors, own SQLConf).
-        # The pinned_shuffle family (width / adaptive / broadcast-
-        # threshold pins on the iterative + streaming operators) sets
-        # SESSION-scoped conf, so on a shared session one thread's
-        # adaptive=False or width-4 stream pin re-plans every OTHER
-        # in-flight query under it — nondeterministic cross-talk that
-        # made the concurrent wall swing 35-62 s across rounds 5-7.
-        # Child sessions inherit the builder-level tuning (they read the
-        # shared SparkConf) and isolate the pins, which is also the
-        # honest cluster shape: a verification fleet runs one session
-        # per submitted job.
-        import threading
+    qs = spark_queries()
+    t0 = time.perf_counter()
+    records = profile(spark, ["sort_limit"] + sorted(set(qs) - {"sort_limit"}),
+                      sf_dir, REPS)
+    seq_elapsed = round(time.perf_counter() - t0, 3)
+    for r in records:
+        if "error" in r:
+            print(f"# bench error {r['check']}: {r['error'][:120]}",
+                  file=sys.stderr)
+    warm = warm_times(records)
+    with open(os.path.join(REPO, "bench_sequential.json"), "w") as fh:
+        json.dump({"pass": "sequential", "protocol": PROTOCOL, "sf": sf,
+                   "cpus": cpus, "wall_sec": round(sum(warm.values()), 3),
+                   "queries": {k: round(v, 2) for k, v in warm.items()},
+                   "records": records}, fh)
 
-        tl = threading.local()
+    nthreads = min(32, cpus)
+    order = sorted(qs, key=lambda n: (-warm.get(n, 0.0), n))
+    conc_times, conc_wall = run_concurrent(spark, qs, order, sf_dir, nthreads)
+    with open(os.path.join(REPO, "bench_concurrent.json"), "w") as fh:
+        json.dump({"pass": "concurrent", "nthreads": nthreads,
+                   "wall_sec": conc_wall,
+                   "queries": {k: round(v, 2) for k, v in conc_times.items()}},
+                  fh)
 
-        def get_session():
-            if not per_thread_session:
-                return spark
-            s = getattr(tl, "spark", None)
-            if s is None:
-                s = tl.spark = spark.newSession()
-            return s
-
-        def run_one(name: str) -> None:
-            t0 = time.time()
-            try:
-                df = qs[name](get_session(), sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                times[name] = round(time.time() - t0, 3)
-            except Exception as ex:  # a failing query must not hide the rest
-                print(f"# bench error {name}: {str(ex).splitlines()[0][:120]}",
-                      file=sys.stderr)
-                times[name] = -1.0
-        return run_one
-
-    # longest-processing-time-first order: the heavy near-dup/ML queries
-    # start immediately so the suite's makespan is their runtime, not
-    # their runtime plus whatever queued in front of them
-    heavy = ["triangle_count", "random_walks", "dedup_survivors", "kcore",
-             "bpe_merges", "scoring_linear", "span_hits", "repeated_spans",
-             "pipeline_pretrain", "stream_cms",
-             "dedup_semantic", "dedup_semantic_inc", "sim_pq_index",
-             "dedup_semantic_km", "kmeans_clusters", "cluster_sample",
-             "dsir_select", "lm_perplexity",
-             "dedup_clusters_star",
-             "dedup_clusters", "sim_ivf", "sim_pq", "stream_join_full",
-             "stream_join_outer",
-             "dedup_simhash_exact", "dedup_minhash_exact", "sparse_cosine",
-             "recursive_cte", "pagerank", "cohort_retention",
-             "sessionize_stream", "term_salience",
-             "dedup_ngram", "dedup_simhash", "dedup_minhash", "dedup_stream",
-             "embed_neardup", "sim_topk", "sim_lsh", "pack_chunks",
-             "sessionize", "mm_features", "stream_hourly", "join_range",
-             "decontaminate", "token_count", "emb_quantize"]
-    order = [q for q in heavy if q in qs] + \
-        [q for q in sorted(qs) if q not in heavy]
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = {s.strip() for s in only.split(",") if s.strip()}
-        order = [q for q in order if q in keep]
-        qs = {k: v for k, v in qs.items() if k in keep}
-
-    # One submitting thread per core: the suite is stage-latency-bound,
-    # not CPU-bound (~60 short queries x ~10 stages each), so deep
-    # concurrency + FAIR scheduling keeps the task slots saturated.
-    # Measured makespan at 32 cores: 8 threads ~14s, 32 threads ~11.3s.
-    nthreads = int(os.environ.get("SPARK_GRAFT_BENCH_THREADS", "0")) \
-        or min(32, int(cpus))
-    seq_only = bool(os.environ.get("SPARK_GRAFT_BENCH_SEQUENTIAL"))
-    skip_seq = bool(os.environ.get("SPARK_GRAFT_BENCH_SKIP_SEQUENTIAL"))
-
-    def run_concurrent() -> tuple[dict[str, float], float]:
-        times: dict[str, float] = {}
-        run_one = make_runner(times, per_thread_session=True)
-        from concurrent.futures import ThreadPoolExecutor
-
-        t0 = time.time()
-        with ThreadPoolExecutor(max_workers=nthreads) as pool:
-            list(pool.map(run_one, order))
-        return times, round(time.time() - t0, 3)
-
-    def load_reference() -> dict[str, float]:
-        """Committed quiet-machine per-query walls (bench_reference.json,
-        regenerated by `SPARK_GRAFT_BENCH_WRITE_REF=1 python bench.py`
-        on a quiet box) — the thresholds for the contention re-time
-        guard below.  Missing file → empty map (absolute fallback
-        threshold only)."""
-        try:
-            with open(os.path.join(REPO, "bench_reference.json")) as fh:
-                return {k: float(v)
-                        for k, v in json.load(fh)["queries"].items()}
-        except Exception:
-            return {}
-
-    def run_sequential() -> tuple[dict[str, float], float, float]:
-        """Returns (kept per-query walls, sum-of-kept, raw elapsed).
-
-        Contention re-time guard (round-9): the round-8 official
-        artifact read +58% over the builder's own same-HEAD band
-        because the driver's single cold pass absorbed box contention
-        (trivial checks inflated 5-10x over their parity walls).  The
-        guard is deterministic and applies uniformly: any query whose
-        first wall exceeds max(1.5 s, 2x its committed quiet-machine
-        reference wall) — or 5 s absolute when it has no reference
-        entry yet — is re-timed ONCE after the pass completes
-        (contention at minute T has usually moved on by the end), and
-        the MIN of the two walls is kept.  No cherry-picking: the rule
-        never drops a slow query, it only gives provably-outlier walls
-        one second sample.  The headline is the SUM of kept walls, so
-        a transient spike costs its re-run wall, not its spike."""
-        times: dict[str, float] = {}
-        run_one = make_runner(times)
-        ref = load_reference()
-        t0 = time.time()
-        # alphabetical, NOT heavy-first: sequential total is
-        # order-independent, and running the light queries first means
-        # the heavy graph/streaming batch measures on a warm machine
-        # instead of absorbing one-time JVM/codegen costs — per-query
-        # numbers stay comparable round-over-round
-        for i, name in enumerate(sorted(order)):
-            # periodic block release: leftover checkpoint blocks from
-            # completed queries otherwise accumulate across the pass and
-            # tax later queries (same effect the inter-pass release
-            # addresses); the gc itself costs ~10 ms per call
-            if i and i % 25 == 0:
-                release_blocks()
-            run_one(name)
-        flagged = sorted(
-            n for n, t in times.items()
-            if t > 0 and t > (max(1.5, 2.0 * ref[n]) if n in ref else 5.0))
-        # bounded second pass: at most 60 re-times (a permanently
-        # contended box must not double the suite), deterministic order.
-        # Release leftover checkpoint blocks first: the re-time samples
-        # must not inherit the full pass's accumulated block-manager
-        # state (the same pollution the periodic release above bounds)
-        if flagged:
-            release_blocks()
-        for name in flagged[:60]:
-            first = times[name]
-            run_one(name)
-            if times[name] < 0 or first < times[name]:
-                times[name] = first  # keep min; errors keep 1st sample
-        return (times, round(sum(t for t in times.values() if t > 0), 3),
-                round(time.time() - t0, 3))
-
-    def release_blocks() -> None:
-        """Between passes: checkpointed RDD blocks from finished queries
-        are only freed when their Python DataFrames are GC'd and the
-        ContextCleaner runs — 185 queries of leftovers otherwise crowd
-        executor storage and make later heavy shuffles spill (observed:
-        the first sequential query paying 2-3x its quiet-machine time).
-        An explicit gc + cache clear between passes keeps each pass's
-        timings independent of what ran before it."""
-        import gc
-
-        gc.collect()
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
-
-    conc_times: dict[str, float] = {}
-    seq_times: dict[str, float] = {}
-    conc_wall = seq_wall = seq_elapsed = None
-    if not seq_only:
-        conc_times, conc_wall = run_concurrent()
-        release_blocks()
-    if not skip_seq:
-        # one query at a time: slot-contention-free numbers for
-        # round-over-round per-query comparison
-        seq_times, seq_wall, seq_elapsed = run_sequential()
-        if os.environ.get("SPARK_GRAFT_BENCH_WRITE_REF"):
-            # regenerate the quiet-machine reference: min-merge with any
-            # existing file so repeated runs tighten the thresholds.
-            # Re-baseline rule: when a query's plan legitimately gets
-            # HEAVIER (shape change), delete its entry from
-            # bench_reference.json before regenerating — min-merge
-            # would otherwise pin an unachievable floor and the guard
-            # would re-time that query every pass (round-9: hll_union)
-            ref_path = os.path.join(REPO, "bench_reference.json")
-            prev = {}
-            try:
-                with open(ref_path) as fh:
-                    prev = json.load(fh)["queries"]
-            except Exception:
-                pass
-            # carry forward entries NOT in this run (a BENCH_ONLY +
-            # WRITE_REF pass must tighten its subset, not truncate the
-            # reference to it); on a FULL pass, prune keys absent from
-            # the run — renamed/deleted checks must not pin stale floors
-            # forever (round-11 advisor item)
-            merged = dict(prev) if only else \
-                {k: v for k, v in prev.items() if k in seq_times}
-            merged.update({k: round(min(float(prev.get(k, v)), v), 3)
-                           for k, v in seq_times.items() if v > 0})
-            with open(ref_path, "w") as fh:
-                json.dump({"pass": "reference", "queries": merged}, fh,
-                          indent=0, sort_keys=True)
-
-    # headline metric = sequential suite wall (the number BASELINE.md is
-    # compared against; concurrent wall rides along for the
-    # suite-throughput axis); falls back to concurrent when the
-    # sequential pass is skipped for fast iteration
-    if seq_wall is not None:
-        metric, value = "wall_sec_all_checks_sequential", seq_wall
-    else:
-        metric, value = f"wall_sec_all_checks_concurrent{nthreads}", conc_wall
-    n_err = sum(1 for t in {**conc_times, **seq_times}.values() if t < 0)
-    r2 = lambda m: {k: round(v, 2) for k, v in m.items()}  # noqa: E731
-    # Protocol stamp (round-10, advisor item): since round 9 the
-    # headline is the SUM of per-query min-of-2 KEPT walls, not a
-    # measured single-pass wall clock — the re-timed sample also
-    # benefits from warm-up, so kept-sums read systematically lower
-    # than any pre-round-9 single-pass number.  The stamp makes the two
-    # regimes machine-distinguishable: artifacts without "protocol"
-    # are single-pass (rounds ≤ 8), "kept-sum-v2" is the guarded sum.
-    headline = {"metric": metric, "value": value, "unit": "sec",
-                "protocol": "kept-sum-v2",
-                "sf": sf, "cpus": int(cpus),
-                "concurrent_wall_sec": conc_wall,
-                "sequential_wall_sec": seq_wall,
-                "sequential_elapsed_sec": seq_elapsed,
-                "n_queries": len(qs), "n_errors": n_err}
-    # The contention-inflated concurrent per-query map is NOT comparable
-    # round-over-round (32 queries share task slots), so it never touches
-    # stdout: sidecar file, self-labeled.
-    if conc_times:
-        with open(os.path.join(REPO, "bench_concurrent.json"), "w") as fh:
-            json.dump({"pass": "concurrent", "nthreads": nthreads,
-                       "wall_sec": conc_wall,
-                       "queries": r2(conc_times)}, fh)
-    # Sequential sidecar (round-7 verdict item 6): the driver keeps only
-    # the TAIL of stdout, so the stdout per-query line can truncate —
-    # the sidecar carries the full round-over-round comparable map.
-    # Drift report (round-10 verdict item 8): the re-time guard only
-    # fires ABOVE 2× the committed quiet floor, so a genuine code
-    # regression landing between 1× and 2× is never re-timed and would
-    # silently raise the kept-sum.  Diff the kept walls against the
-    # PREVIOUS round's committed kept map (bench_sequential.json as it
-    # was before this run overwrites it) and surface the top-10
-    # increases — real regressions show up here without loosening the
-    # guard; box-wide drift shows up as ~uniform inflation instead.
-    if seq_times:
-        seq_path = os.path.join(REPO, "bench_sequential.json")
-        prev_kept: dict[str, float] = {}
-        try:
-            with open(seq_path) as fh:
-                prev_kept = {k: float(v) for k, v in
-                             json.load(fh)["queries"].items()}
-        except Exception:
-            pass
-        drift = sorted(
-            ((n, prev_kept[n], t, round(t - prev_kept[n], 2))
-             for n, t in seq_times.items()
-             if t > 0 and n in prev_kept and prev_kept[n] > 0),
-            key=lambda x: -x[3])[:10]
-        drift_obj = {"pass": "drift",
-                     "note": "top-10 kept-wall increases vs previous "
-                             "committed bench_sequential.json "
-                             "(prev, now, delta)",
-                     "top10": {n: [p, round(t, 2), d]
-                               for n, p, t, d in drift}}
-        with open(seq_path, "w") as fh:
-            json.dump({"pass": "sequential", "wall_sec": seq_wall,
-                       "protocol": "kept-sum-v2",
-                       "drift_top10": drift_obj["top10"],
-                       "queries": r2(seq_times)}, fh)
-    # Per-query sequential map, CHUNKED (round-11 verdict item 1): the
-    # driver keeps only the last 2000 chars of stdout, so the single
-    # 252-entry map line truncated mid-map two rounds running and the
-    # driver's per-query comparison ran empty.  Emit the map as short
-    # self-labeled part-lines ({"pass":"sequential","part":i,"of":n,
-    # "queries":{...}}) right before the (unchanged, still-last)
-    # headline — each complete line in the tail parses on its own.
-    # Entries are ordered by ascending kept wall so the SLOWEST queries
-    # (the ones regression detection cares about) land nearest the
-    # headline and survive the tail cut.  The full map stays in the
-    # bench_sequential.json sidecar; the drift report lives only there
-    # too (its stdout copy burned ~200 chars of the same tail budget).
-    if seq_times:
-        entries = sorted(r2(seq_times).items(), key=lambda kv: (kv[1], kv[0]))
-        chunks, cur, cur_len = [], {}, 0
-        for k, v in entries:
-            ent_len = len(k) + len(json.dumps(v)) + 4  # "k":v,
-            if cur and cur_len + ent_len > 380:
-                chunks.append(cur)
-                cur, cur_len = {}, 0
-            cur[k] = v
-            cur_len += ent_len
-        if cur:
-            chunks.append(cur)
-        for i, ch in enumerate(chunks):
-            print(json.dumps({"pass": "sequential", "part": i + 1,
-                              "of": len(chunks), "queries": ch},
-                             separators=(",", ":")), flush=True)
-    print(json.dumps(headline), flush=True)
+    for line in report(records, conc_times, conc_wall, sf, cpus, seq_elapsed):
+        print(line, flush=True)
     spark.stop()
 
 

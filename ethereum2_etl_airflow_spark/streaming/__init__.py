@@ -157,4 +157,8 @@ def run_bounded(df, spark: SparkSession, mode: str = "append",
             else:
                 spark.conf.set(nodata_key, prev_nodata)
         shutil.rmtree(ck, ignore_errors=True)
-    return spark.table(name)
+    # the analyzed plan keeps the memory-sink node, so the view can go:
+    # otherwise every run leaves one uuid-named table in driver memory
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

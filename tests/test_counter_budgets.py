@@ -1,0 +1,33 @@
+"""Per-check Spark job and stage budgets, read through
+``tools/profile.py``: an added barrier (an eager ``collect()``, a new
+exchange) fails here instead of hiding in wall-time noise.
+
+Budgets are the larger of the counts measured at ``local[4]`` and
+``local[8]`` at sf0.001.  Tasks and bytes are not pinned: they move with
+the core count."""
+
+from __future__ import annotations
+
+# check: (jobs, stages) of one warm run
+BUDGETS = {
+    "sort_limit": (2, 2),
+    "pipeline_pretrain": (9, 9),
+    "dedup_clusters": (13, 19),
+    "triangle_count": (13, 13),
+    "sessionize_stream": (7, 9),
+    "bpe_merges": (11, 19),
+    "retrieval_mmr": (10, 10),
+}
+
+
+def test_checks_stay_within_counter_budgets(spark, sf_dir):
+    from tools.profile import profile
+
+    over = {}
+    for rec in profile(spark, list(BUDGETS), sf_dir, 1):
+        assert "error" not in rec, rec
+        jobs, stages = BUDGETS[rec["check"]]
+        if rec["jobs"] > jobs or rec["stages"] > stages:
+            over[rec["check"]] = {"jobs": (rec["jobs"], jobs),
+                                  "stages": (rec["stages"], stages)}
+    assert not over, f"(measured, budget) over budget: {over}"

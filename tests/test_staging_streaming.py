@@ -775,3 +775,27 @@ def test_run_bounded_flush_false_matches_and_restores_conf(spark, tmp_path):
     spark.conf.set(key, "true")
     assert run(flush=False) == run(flush=True)
     assert spark.conf.get(key) == "true"  # restored to the prior value
+
+
+def test_run_bounded_drops_its_memory_sink(spark, tmp_path):
+    """Each run's uuid-named memory-sink view is dropped before the
+    result returns, and the result still reads and aggregates from the
+    sink."""
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
+
+    src = str(tmp_path / "ev")
+    spark.range(12).selectExpr("id", "id % 3 AS k").coalesce(1) \
+        .write.parquet(src)
+    stream = spark.readStream.schema("id long, k long").parquet(src)
+
+    def sink_views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("st_")}
+
+    before = sink_views()
+    out = run_bounded(stream.where("k = 1"), spark)
+    assert sink_views() - before == set()
+    first = sorted(map(tuple, out.collect()))
+    assert first == [(1, 1), (4, 1), (7, 1), (10, 1)]
+    assert sorted(map(tuple, out.collect())) == first
+    assert out.groupBy("k").count().collect()[0]["count"] == 4

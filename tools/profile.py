@@ -15,6 +15,7 @@ It prints one JSON record per (check, sf dir, cpus): ``cold_s``,
 ``warm_med_s``, the last warm run's counters (jobs, stages, tasks,
 shuffle, spill, Python, broadcast and stream counters) and ``driver_s``,
 the median warm wall minus the time Spark jobs were running.
+``profile()`` is also bench.py's sequential pass.
 
 Data axis: each point is an sf directory.  Points beyond the reference
 test data are written by ``perfbench/datagen.write_tables(dir, sf, seed)``,

@@ -3,10 +3,10 @@ docs/RATIOS.md's data source and the repo's own copy of the judge's
 ≥2× audit.
 
 For every oracle-backed check: run the Spark query (forced with a noop
-sink) and its oracle (32-thread DuckDB over the same parquet), both
-once warm, and report the ratio.  Queries at ≥ 2× their own oracle are
-the per-query performance debt; the suite-level target (BASELINE.json)
-is the aggregate wall.
+sink) and its oracle (DuckDB over the same parquet, one thread per
+core), both once warm, and report the ratio.  Queries at ≥ 2× their own
+oracle are the per-query performance debt; the suite-level target
+(BASELINE.json) is the aggregate wall.
 
     python tools/ratios.py [--sf-dir /root/testdata/sf0.1] \
         [--only a,b,c] [--min-sec 0.5]
@@ -30,90 +30,17 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 
-def _drift_section() -> list[str]:
-    """Auto-generated host-drift audit (round-11, VERDICT item 8):
-    compare each query's committed close-run walls (the two most recent
-    BENCH_r*.json) against the quiet floor (bench_reference.json) and
-    flag queries >2× their floor in BOTH rounds — two-rounds-running
-    separates per-query code creep from the documented transient host
-    slow phases (one bad round = drift; two = investigate the plan)."""
-    import glob
-    import json as _json
-
-    lines = ["", "## Drift audit (auto-generated)", ""]
-    try:
-        with open(os.path.join(REPO, "bench_reference.json")) as fh:
-            floor = _json.load(fh)["queries"]
-    except Exception:
-        return lines + ["(no bench_reference.json — floor unavailable)"]
-    benches = sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")))[-2:]
-    if len(benches) < 2:
-        return lines + ["(needs two BENCH_r*.json rounds)"]
-    per_round = []
-    for b in benches:
-        try:
-            with open(b) as fh:
-                txt = fh.read()
-            d = _json.loads(txt)
-            # driver BENCH files wrap the bench line under "tail"
-            # (truncated) or carry the map directly — accept both
-            qmap = d.get("queries")
-            if qmap is None and "tail" in d:
-                # tail is a truncated JSON fragment: salvage the
-                # "name": sec pairs with a regex
-                import re as _re
-                qmap = {m.group(1): float(m.group(2)) for m in
-                        _re.finditer(r'"([a-z0-9_]+)":\s*([0-9.]+)',
-                                     d["tail"])}
-            per_round.append((os.path.basename(b), qmap or {}))
-        except Exception:
-            per_round.append((os.path.basename(b), {}))
-    flagged = []
-    for q, fl in sorted(floor.items()):
-        if not isinstance(fl, (int, float)) or fl < 0.3:
-            continue  # sub-noise floors can't adjudicate drift
-        walls = [r.get(q) for _, r in per_round]
-        if all(w is not None and w > 2 * fl for w in walls):
-            flagged.append((q, fl, walls))
-    names = " + ".join(n for n, _ in per_round)
-    lines.append(f"Floor: bench_reference.json (min-merged quiet walls); "
-                 f"rounds audited: {names}.  Flagged = wall > 2× floor "
-                 f"in BOTH rounds AND floor ≥ 0.3 s.  Caveat: when the "
-                 f"CURRENT round re-shaped a query, its floor reflects "
-                 f"the new plan while the audited walls are the old "
-                 f"plan's — such a flag reads 'already fixed this "
-                 f"round', not creep (check the round notes above).")
-    lines.append("")
-    if not flagged:
-        lines.append("No query exceeded 2× its quiet floor two rounds "
-                     "running — committed-run inflation is host drift, "
-                     "not per-query creep.")
-        return lines
-    lines += ["| check | floor s | " +
-              " | ".join(n for n, _ in per_round) + " |",
-              "|---|---|" + "---|" * len(per_round)]
-    for q, fl, walls in flagged:
-        lines.append(f"| {q} | {fl:.2f} | " +
-                     " | ".join(f"{w:.2f}" for w in walls) + " |")
-    lines.append("")
-    lines.append("These queries ran >2× their quiet floor two rounds "
-                 "running — re-profile the plan (not attributable to a "
-                 "single host slow phase).")
-    return lines
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--only", default="")
     ap.add_argument("--min-sec", type=float, default=0.5)
     ap.add_argument("--bench-json", default="",
-                    help="path to a file whose first line is bench.py's "
-                         '{"pass": "sequential", "queries": ...} map; '
-                         "spark times come from it (single cold run, "
-                         "matching how the suite is compared) and only "
-                         "the oracles are timed here — halves the "
-                         "audit's runtime")
+                    help="bench.py's bench_sequential.json (or a file "
+                         'holding a {"pass": "sequential", "queries": ...} '
+                         "map); spark times come from its warm medians "
+                         "and only the oracles are timed here — halves "
+                         "the audit's runtime")
     args = ap.parse_args()
 
     import json
@@ -125,9 +52,6 @@ def main() -> int:
     bench_times: dict[str, float] = {}
     if args.bench_json:
         with open(args.bench_json) as fh:
-            # whole-file load: bench_reference.json is written with
-            # indent=0 (multi-line); bench.py's stdout map is one line —
-            # json.load handles both
             bench_times = json.load(fh)["queries"]
         spark = None
     else:
@@ -138,7 +62,8 @@ def main() -> int:
     keep = {s.strip() for s in args.only.split(",") if s.strip()}
 
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    threads = os.cpu_count() or 4
+    con.execute(f"SET threads TO {threads}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{args.sf_dir}/{t}.parquet')")
@@ -154,16 +79,11 @@ def main() -> int:
         return times[len(times) // 2]
 
     def oracle_time(sql: str, runs: int = 1) -> tuple[float, list[float]]:
-        # single cold run when spark times come from bench (bench's
-        # numbers are single cold runs too — like-for-like); warm+timed
-        # otherwise.  Returns (median, all samples) — the samples are
-        # RECORDED in the artifact for re-timed rows, so a bar verdict
-        # carries its own evidence (round-11: triangle_count's closure
-        # hinged on proving the one-shot oracle wall was a 2-5× drift
-        # artifact; the artifact now shows the spread instead of
-        # asserting it)
-        if not bench_times:
-            con.execute(sql).fetchall()
+        # warm, like both spark sides (bench's walls are warm medians).
+        # Returns (median, all samples): the samples are recorded in the
+        # artifact for re-timed rows, so a bar verdict carries its own
+        # evidence of the spread
+        con.execute(sql).fetchall()
         times = []
         for _ in range(runs):
             t0 = time.time()
@@ -219,8 +139,8 @@ def main() -> int:
         "# Per-query Spark vs DuckDB-oracle ratios "
         "(generated by tools/ratios.py)",
         "",
-        f"Both sides once warm at `{sf}`; DuckDB at 32 threads on the "
-        "same parquet.",
+        f"Host: {os.cpu_count()} cores.  Both sides once warm at `{sf}`; "
+        f"DuckDB at {threads} threads on the same parquet.",
         f"Queries where BOTH sides run under {args.min_sec}s are "
         "omitted (noise).",
         "Protocol: any query whose single-shot ratio lands in "
@@ -255,7 +175,6 @@ def main() -> int:
             flag = ""
         lines.append(f"| {name}{flag} | {st:.2f} | {ot:.2f} "
                      f"| {ratio:.2f}× | {note} |")
-    lines += _drift_section()
     with open(os.path.join(REPO, "docs", "RATIOS.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"\nwrote docs/RATIOS.md — {len(shown)} shown, "
