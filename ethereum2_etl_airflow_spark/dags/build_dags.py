@@ -328,11 +328,11 @@ def build_load_dag(cfg: LoadConfig, spark_factory: Callable,
         catchup=cfg.load_end_date is not None,
     )
 
-    # full-history staged NDJSON for a table — ADVICE fix: the hourly
-    # tree has an extra hour=HH level, so the glob is deeper
+    # full-history staged NDJSON for an hourly load — ADVICE fix: the
+    # hourly tree has an extra hour=HH level, so the glob is deeper
     def staged_glob(src_table: str) -> str:
-        base = staging_path(staging_root, src_table, hourly=hourly)
-        return base + ("/*/*/*.json" if hourly else "/*/*.json")
+        return staging_path(staging_root, src_table,
+                            hourly=True) + "/*/*/*.json"
 
     # the O6 sensor pokes ONE tick's partition, like the reference's
     # `block_date={{ds}}` object poke (build_load_dag.py:71) — ds/hour
@@ -357,14 +357,13 @@ def build_load_dag(cfg: LoadConfig, spark_factory: Callable,
                 write_latest_snapshot(
                     df, f"{warehouse_root}/beacon_validators_latest")
                 return
-            snapshot = table == "beacon_validators" and not hourly
-            if snapshot:
-                # the daily snapshot is ds's staged partition only, as in
-                # the reference (build_load_dag.py:88-90,127): a backfill
-                # loads ds's snapshot, not the newest one staged
-                src = staging_path(staging_root, src_table, ds) + "/*.json"
-            else:
-                src = staged_glob(src_table)
+            # a daily load reads ds's staged partition only, as in the
+            # reference (build_load_dag.py:88-90,127): dynamic overwrite
+            # replaces ds's warehouse partition and leaves older dates
+            # untouched, and a backfill loads ds's validators snapshot,
+            # not the newest one staged
+            src = (staged_glob(src_table) if hourly else
+                   staging_path(staging_root, src_table, ds) + "/*.json")
             df = read_ndjson(spark, src, beacon_schema(src_table))
             if table == "beacon_validators_hourly":
                 # point-in-time table: (block_date, hour) partitions so a
@@ -376,7 +375,8 @@ def build_load_dag(cfg: LoadConfig, spark_factory: Callable,
                                   partition_cols=["block_date", "hour"])
                 return
             load_table(spark, df, f"{warehouse_root}/{table}", ts_col,
-                       only_last_date=snapshot)
+                       only_last_date=(table == "beacon_validators"
+                                       and not hourly))
         return _load
 
     def make_verify(check: str):

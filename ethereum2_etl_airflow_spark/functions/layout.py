@@ -25,8 +25,8 @@ import threading
 from pyspark.sql import DataFrame
 
 __all__ = ["ensure_parallelism", "finalize_release", "zorder_key",
-           "zorder_by", "pinned_shuffle", "plan_width", "parallel_frames",
-           "local_frame"]
+           "zorder_by", "pinned_conf", "pinned_shuffle", "plan_width",
+           "parallel_frames", "local_frame"]
 
 
 def parallel_frames(*thunks):
@@ -42,11 +42,12 @@ def parallel_frames(*thunks):
     arms from a small thread pool lets the scheduler back-fill: the
     composite's wall becomes ~max(arm walls) instead of their sum.
 
-    Safe under the session-conf pins: :func:`pinned_shuffle` is
-    reference-counted per session (overlapping holders share the
-    outermost width — a performance knob, never correctness, for every
-    operator behind it), and every operator here is layout-invariant
-    by design."""
+    Safe under the session-conf pins: :func:`pinned_conf` counts
+    holders per (session, key), so overlapping arms share the first
+    holder's value (for the shuffle width a performance knob, never
+    correctness: every operator here is layout-invariant by design)
+    and the last one out restores it.  A stream captures its conf at
+    ``start()``, which :func:`..streaming.run_bounded` serializes."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
@@ -55,110 +56,61 @@ def parallel_frames(*thunks):
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]
 
-#: reentrancy guard for :func:`pinned_shuffle` — PER-SESSION holder
-#: counts + the conf values saved by the first holder of each knob
-#: (``spark.conf`` is per-SparkSession, so the state must be keyed by
-#: the session: a module-global scalar would silently skip pinning a
-#: second session and then restore the FIRST session's saved conf into
-#: it — exactly the leak the guard exists to prevent).  Entries are
-#: deleted on the last exit, so ``id()`` reuse after a session is
-#: garbage-collected can never alias stale state.
+#: holder counts and saved values for :func:`pinned_conf`, keyed by
+#: (session, conf key).  ``spark.conf`` is per-SparkSession, so the
+#: key includes the session: a global count would skip pinning a second
+#: session and restore the first session's saved value into it.
+#: Entries are deleted on the last exit, so ``id()`` reuse after a
+#: session is garbage-collected can never alias stale state.
 _pin_lock = threading.Lock()
-_pin_state: dict[int, dict] = {}
+_pin_state: dict[tuple[int, str], list] = {}
 
 
 @contextlib.contextmanager
-def pinned_shuffle(spark, n: int, adaptive: bool | None = None,
-                   broadcast_threshold: str | None = None):
-    """Pin ``spark.sql.shuffle.partitions`` (and optionally
-    ``spark.sql.adaptive.enabled``) for a bounded scope.
+def pinned_conf(spark, conf: dict[str, str | int]):
+    """Set session conf ``conf`` for a bounded scope; the only code in
+    the package that changes session conf for a scope.
 
-    ``adaptive=False`` is for driver-looped micro-queries whose width
-    is already pinned right: AQE's per-stage materialize→re-optimize
-    round-trip adds latency per job and has nothing left to decide
-    once the shuffle width is exact (measured ~0.5 s over a 12-round
-    BPE loop).  Leave ``None`` (untouched) wherever AQE can still help.
-
-    Two kinds of operator need a pinned-small shuffle width instead of
-    the session default: availableNow stream runs (the stateful
-    partition count is captured into the checkpoint at START, and
-    every state store costs an open/commit/fsync per micro-batch) and
-    driver-looped iterative batches over bounded tables (a BPE vocab,
-    k-means assignments — each round's shuffle pays per-partition
-    fixed costs × rounds).  Both size ``n`` to the data, not the box.
-
-    Reentrancy (per session): overlapping holders of the SAME session
-    are reference-counted per knob —
-
-    - width: only the OUTERMOST enter saves the previous value and
-      only the LAST exit restores it; all holders share the outermost
-      pin value for the nesting episode (partition count is a
-      performance knob, never a correctness one, for every operator
-      behind this guard).
-    - adaptive: the FIRST holder that passes a non-``None`` value
-      saves/sets the flag and the LAST such holder restores it — so an
-      inner ``adaptive=False`` request is honored even when the outer
-      pin left AQE untouched (e.g. a BPE/k-means loop running while a
-      ``bounded_state`` stream pin is held).  Conflicting nested
-      non-``None`` values: the first wins (no operator here mixes
-      them; both only ever request ``False``).
-    - broadcast_threshold: same first-saves / last-restores protocol as
-      adaptive — kcore's scoped ``autoBroadcastJoinThreshold`` raise
-      goes through here so two concurrent peels (or a peel nested with
-      any other holder) can never interleave a naive save/restore and
-      leave the session permanently at the raised value.
-
-    Holders of DIFFERENT sessions are fully independent — each
-    session's conf is saved/pinned/restored on its own."""
-    key = id(spark)
-    holds_adaptive = adaptive is not None
-    holds_thresh = broadcast_threshold is not None
+    Holders are counted per (session, key): the first holder of a key
+    saves its value (``None`` if unset) and sets the new one; the last
+    holder restores the saved value, or unsets the key if it was unset.
+    Overlapping holders of a key, nested or on other threads, share the
+    first holder's value, so an inner exit never restores early and
+    concurrent exits restore exactly once.  Sessions are independent."""
+    keys = [(id(spark), k) for k in conf]
     with _pin_lock:
-        st = _pin_state.get(key)
-        if st is None:
-            st = _pin_state[key] = {"depth": 0, "saved_part": None,
-                                    "adep": 0, "saved_adaptive": None,
-                                    "tdep": 0, "saved_thresh": None}
-        if st["depth"] == 0:
-            st["saved_part"] = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        st["depth"] += 1
-        if holds_adaptive:
-            if st["adep"] == 0:
-                st["saved_adaptive"] = \
-                    spark.conf.get("spark.sql.adaptive.enabled")
-                spark.conf.set("spark.sql.adaptive.enabled",
-                               str(adaptive).lower())
-            st["adep"] += 1
-        if holds_thresh:
-            if st["tdep"] == 0:
-                st["saved_thresh"] = spark.conf.get(
-                    "spark.sql.autoBroadcastJoinThreshold")
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                               broadcast_threshold)
-            st["tdep"] += 1
+        for key, v in zip(keys, conf.values()):
+            st = _pin_state.get(key)
+            if st is None:
+                st = _pin_state[key] = [0, spark.conf.get(key[1], None)]
+                spark.conf.set(key[1], str(v))
+            st[0] += 1
     try:
         yield
     finally:
         with _pin_lock:
-            st = _pin_state[key]
-            if holds_adaptive:
-                st["adep"] -= 1
-                if st["adep"] == 0:
-                    spark.conf.set("spark.sql.adaptive.enabled",
-                                   st["saved_adaptive"])
-                    st["saved_adaptive"] = None
-            if holds_thresh:
-                st["tdep"] -= 1
-                if st["tdep"] == 0:
-                    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                                   st["saved_thresh"])
-                    st["saved_thresh"] = None
-            st["depth"] -= 1
-            if st["depth"] == 0:
-                spark.conf.set("spark.sql.shuffle.partitions",
-                               st["saved_part"])
-                del _pin_state[key]
+            for key in keys:
+                st = _pin_state[key]
+                st[0] -= 1
+                if st[0] == 0:
+                    del _pin_state[key]
+                    if st[1] is None:
+                        spark.conf.unset(key[1])
+                    else:
+                        spark.conf.set(key[1], st[1])
+
+
+def pinned_shuffle(spark, n: int):
+    """Pin the shuffle width to ``n`` with AQE off, for driver-looped
+    iterative batches over bounded tables (a BPE vocab, k-means
+    assignments, PageRank rounds) whose width is sized to the data: each
+    round's shuffle pays per-partition fixed costs × rounds, and AQE's
+    per-stage materialize→re-optimize round-trip adds latency per job
+    with nothing left to decide once the width is exact (measured
+    ~0.5 s over a 12-round BPE loop).  Partition count is a performance
+    knob, never a correctness one, for every operator behind it."""
+    return pinned_conf(spark, {"spark.sql.shuffle.partitions": n,
+                               "spark.sql.adaptive.enabled": "false"})
 
 
 def plan_width(df: DataFrame, floor: int = 8,

@@ -241,7 +241,7 @@ def kmeans_fit_centroids(qdf: DataFrame, k: int, n_iter: int,
 
     if width is None:  # callers inside a pin pass their width through
         width = plan_width(qdf, floor=max(1, min(8, k)))
-    with pinned_shuffle(qdf.sparkSession, width, adaptive=False):
+    with pinned_shuffle(qdf.sparkSession, width):
         cents = _seed_centroids(qdf, k, id_col)
         if not cents:
             return []
@@ -346,7 +346,7 @@ def _kmeans_int_lazy(emb: DataFrame, k: int, n_iter: int, id_col: str,
     w = plan_width(_quantized(emb, id_col, vec_col, carry=carry, width=0),
                    floor=max(1, min(8, k)))
     qdf = _quantized(emb, id_col, vec_col, carry=carry, width=w).cache()
-    with pinned_shuffle(qdf.sparkSession, w, adaptive=False):
+    with pinned_shuffle(qdf.sparkSession, w):
         cents = kmeans_fit_centroids(qdf, k, n_iter, id_col, width=w)
         final = _assign_literal(qdf, cents, id_col).select(
             id_col, *carry, "cluster", "dist2")
@@ -375,7 +375,7 @@ def cluster_balanced_sample(emb: DataFrame, k: int = 4, n_iter: int = 3,
     asg, qdf, width = _kmeans_int_lazy(emb, k, n_iter, id_col, vec_col)
     w = (Window.partitionBy("cluster")
          .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col)))
-    with pinned_shuffle(asg.sparkSession, width, adaptive=False):
+    with pinned_shuffle(asg.sparkSession, width):
         out = (asg.withColumn("__rn", F.row_number().over(w))
                .where(F.col("__rn") <= per_cluster)
                .select(id_col, "cluster", "dist2"))

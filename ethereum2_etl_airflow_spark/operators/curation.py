@@ -196,7 +196,7 @@ def pack_offsets(df: DataFrame, budget: int = 2048,
     # session cap — same layout as before, minus the per-stage AQE
     # round-trips.
     nparts = plan_width(base, floor=8)
-    with pinned_shuffle(spark, nparts, adaptive=False):
+    with pinned_shuffle(spark, nparts):
         return _pack_offsets_laid(base, spark, nparts, budget,
                                   group_col, id_col)
 
@@ -932,7 +932,7 @@ def plan_shards(df: DataFrame, n_shards: int = 8,
     # round-12 treatment as pack_offsets (this operator is its
     # documented writer-side twin) — see plans/r12/pack_chunks_jobs.txt
     nparts = plan_width(base, floor=8)
-    with pinned_shuffle(spark, nparts, adaptive=False):
+    with pinned_shuffle(spark, nparts):
         return _plan_shards_laid(base, n_shards, nparts,
                                  size_col, id_col)
 

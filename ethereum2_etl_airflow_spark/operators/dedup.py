@@ -65,8 +65,7 @@ def _pinned_by_stats(fn):
 
     @functools.wraps(fn)
     def wrapper(df, *args, **kwargs):
-        with pinned_shuffle(df.sparkSession, plan_width(df, floor=8),
-                            adaptive=False):
+        with pinned_shuffle(df.sparkSession, plan_width(df, floor=8)):
             return fn(df, *args, **kwargs)
     return wrapper
 
@@ -666,8 +665,7 @@ def cosine_near_dup_pairs(emb: DataFrame, block_col: str = "label",
     from ..functions.layout import pinned_shuffle, plan_width
     from ..functions.vectors import dot_compact, with_normalized
 
-    with pinned_shuffle(emb.sparkSession, plan_width(emb, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(emb.sparkSession, plan_width(emb, floor=8)):
         return _cosine_near_dup_build(emb, block_col, threshold_millis,
                                       passthrough)
 
@@ -804,8 +802,7 @@ def semantic_dedup(emb: DataFrame, n_cells: int = 8,
     corpus scale, session-fixed-cost-free at test SFs."""
     from ..functions.layout import pinned_shuffle, plan_width
 
-    with pinned_shuffle(emb.sparkSession, plan_width(emb, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(emb.sparkSession, plan_width(emb, floor=8)):
         return _semantic_dedup_build(emb, n_cells, threshold_millis,
                                      dim, id_col, vec_col,
                                      assign_via_join, refine_iters)
@@ -953,8 +950,7 @@ def semantic_dedup_incremental(batch: DataFrame, history: DataFrame,
                 ensure_parallelism(batch)
                 .select(F.col(id_col), F.col(vec_col),
                         F.lit(False).alias("__hist"))))
-    with pinned_shuffle(both.sparkSession, plan_width(both, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(both.sparkSession, plan_width(both, floor=8)):
         return _semantic_dedup_inc_build(both, n_cells, threshold_millis,
                                          dim, id_col, vec_col,
                                          intra_batch)
@@ -1149,8 +1145,7 @@ def repeated_ngram_spans(docs: DataFrame, n: int = 5, min_docs: int = 2,
     the plan tests assert on the lazy ``_repeated_spans_build``)."""
     from ..functions.layout import pinned_shuffle, plan_width
 
-    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8)):
         return finalize_release(
             _repeated_spans_build(docs, n, min_docs, text_col, id_col))
 
@@ -1248,8 +1243,7 @@ def repeated_span_hits(docs: DataFrame, n: int = 5, min_docs: int = 2,
     rides the grouped rows so per-doc totals are exact sums."""
     from ..functions.layout import pinned_shuffle, plan_width
 
-    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8)):
         per = (_span_gram_hashes(docs, n, text_col, id_col)
                .repartition("h1", "h2")
                .groupBy("h1", "h2", id_col).agg(F.count("*").alias("m")))

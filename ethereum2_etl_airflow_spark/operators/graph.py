@@ -96,18 +96,12 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     # localCheckpoint, and under AQE each exchange in that round's plan
     # becomes its own materialize→re-optimize job — measured at sf0.1,
     # 25 jobs for a 3-round propagation vs 11 with the pin, values
-    # bit-identical.  The width is the session's current value (no
-    # layout change — AQE had nothing left to decide at these widths);
-    # pinning through the refcounted guard keeps nesting with caller
-    # pins safe.
-    from ..functions.layout import pinned_shuffle
+    # bit-identical.  The width stays the session's (no layout change —
+    # AQE had nothing left to decide at these widths).
+    from ..functions.layout import pinned_conf
 
-    spark = edges.sparkSession
-    # raw conf string, not int(): some distributions set this knob
-    # to a non-numeric value (e.g. "auto"), and pinned_shuffle
-    # stringifies the width anyway (round-11 advisor item)
-    cur_width = spark.conf.get("spark.sql.shuffle.partitions")
-    with pinned_shuffle(spark, cur_width, adaptive=False):
+    with pinned_conf(edges.sparkSession,
+                     {"spark.sql.adaptive.enabled": "false"}):
         return _connected_components_label(edges, src, dst, max_iter)
 
 
@@ -204,14 +198,10 @@ def _connected_components_star(edges: DataFrame, src: str, dst: str,
     checkpoint, and AQE turned every one of those exchanges into its
     own per-stage job — measured at sf0.1, 40 jobs for a 3-round run
     vs 12 with the pin, values bit-identical."""
-    from ..functions.layout import pinned_shuffle
+    from ..functions.layout import pinned_conf
 
-    spark = edges.sparkSession
-    # raw conf string, not int(): some distributions set this knob
-    # to a non-numeric value (e.g. "auto"), and pinned_shuffle
-    # stringifies the width anyway (round-11 advisor item)
-    cur_width = spark.conf.get("spark.sql.shuffle.partitions")
-    with pinned_shuffle(spark, cur_width, adaptive=False):
+    with pinned_conf(edges.sparkSession,
+                     {"spark.sql.adaptive.enabled": "false"}):
         return _cc_star_loop(edges, src, dst, max_iter)
 
 
@@ -486,15 +476,15 @@ def pagerank_int(edges: DataFrame, n_iter: int = 3,
     # npart — a width mismatch that re-exchanges the score table every
     # round (measured at sf0.1: ~2.7 s unpinned vs ~1.95 s pinned on a
     # 32-wide bench session; the round-7 RATIOS regression was this
-    # mismatch, not the plan shape).  adaptive=False (round-11): the
+    # mismatch, not the plan shape).  AQE off (round-11): the
     # pinned-width iterative plan leaves AQE nothing to decide — the
     # joins are co-partitioned zero-exchange, the per-round SUM is
     # map-side-combined at the pinned width — while its per-stage
     # materialize→re-optimize round-trips cost real driver latency
     # (measured at sf0.1: 4.04 s with AQE vs 2.27 s without on the
     # same 1.2 M-edge graph) — the same rationale as the BPE/k-means
-    # loops, which already run adaptive=False.
-    with pinned_shuffle(spark, npart, adaptive=False):
+    # loops, which already run with AQE off.
+    with pinned_shuffle(spark, npart):
         e = edges.select("src", "dst").repartition(npart, "src")
         if dedup:
             e = e.distinct()  # co-located: hash(src) clusters (src, dst)
@@ -641,7 +631,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, n_rounds: int = 4,
     is ``localCheckpoint``-ed (|V| rows — orders of magnitude smaller
     than the old |E| checkpoints) because each round's table feeds two
     consumers (the removed probe and the next update)."""
-    from ..functions.layout import pinned_shuffle
+    from ..functions.layout import pinned_conf
 
     # 8 MB/partition, not the 64 MB scan default: the peel SYMMETRIZES
     # the input (2×) and the initial degree count groups the whole
@@ -652,10 +642,8 @@ def kcore_peel(edges: DataFrame, k: int = 3, n_rounds: int = 4,
     # floor, huge ones still cap at the session width
     spark = edges.sparkSession
     npart = _graph_npart(edges, target_bytes=8 << 20)
-    # threshold raise goes through pinned_shuffle's refcounted
-    # per-session state (NOT a naive save/restore): concurrent peels or
-    # nesting with any other holder restore exactly once, last-out
-    with pinned_shuffle(spark, npart, broadcast_threshold="128m"):
+    with pinned_conf(spark, {"spark.sql.shuffle.partitions": npart,
+                             "spark.sql.autoBroadcastJoinThreshold": "128m"}):
         e = (edges.select(F.col(src).cast("long").alias("u"),
                           F.col(dst).cast("long").alias("v"))
              .union(edges.select(F.col(dst).cast("long").alias("u"),

@@ -358,8 +358,7 @@ def source_unigram_divergence(docs: DataFrame, source_col: str = "source",
     from ..functions.layout import (finalize_release, pinned_shuffle,
                                     plan_width)
 
-    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8)):
         res, counts = _source_divergence_build(docs, source_col,
                                                text_col, max_vocab)
         return finalize_release(res, counts)

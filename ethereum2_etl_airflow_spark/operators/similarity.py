@@ -371,7 +371,7 @@ def sparse_cosine_pairs(docs: DataFrame, block_col: str = "source",
 
     docs = ensure_parallelism(docs)
     w = plan_width(docs, floor=8)
-    with pinned_shuffle(docs.sparkSession, w, adaptive=False):
+    with pinned_shuffle(docs.sparkSession, w):
         if strategy == "index":
             res, tc = _sparse_cosine_build(docs, block_col,
                                            threshold_millis,
@@ -872,7 +872,7 @@ def ann_ivf_exact_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
 
     w = plan_width(emb, floor=8)
     base = ensure_parallelism(emb, min_partitions=w)
-    with pinned_shuffle(base.sparkSession, w, adaptive=False):
+    with pinned_shuffle(base.sparkSession, w):
         # ONE cache, materialized once (round-11; was two — a fit-only
         # (id, q) cache plus a serving (vec_id, nv, q, cluster) cache,
         # i.e. two full quantize passes over the corpus): normalized
@@ -1285,7 +1285,7 @@ def build_ivf_index(emb: DataFrame, path: str, n_cells: int = 8,
 
     w = plan_width(emb, floor=8)
     base = ensure_parallelism(emb, min_partitions=w)
-    with pinned_shuffle(base.sparkSession, w, adaptive=False):
+    with pinned_shuffle(base.sparkSession, w):
         qdf = _quantized(base, id_col, vec_col, width=0).cache()
         cents = kmeans_fit_centroids(qdf, n_cells, n_iter, id_col,
                                      width=w)

@@ -444,8 +444,7 @@ def inverted_postings(docs, k: int = 8, text_col: str = "text",
     from ..functions.layout import (finalize_release, pinned_shuffle,
                                     plan_width)
 
-    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8)):
         out, tf = _inverted_postings_build(docs, k, text_col, id_col)
         return finalize_release(out, tf)
 
@@ -644,8 +643,7 @@ def bm25_topk(docs, queries: dict[int, list[str]], k: int = 10,
     from ..functions.layout import (finalize_release, pinned_shuffle,
                                     plan_width)
 
-    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8)):
         return finalize_release(
             _bm25_build(docs, queries, k, k1_milli, b_milli,
                         text_col, id_col))
@@ -752,8 +750,7 @@ def impact_postings(docs, k: int = 8, k1_milli: int = 1200,
     from ..functions.layout import (finalize_release, pinned_shuffle,
                                     plan_width)
 
-    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8)):
         return finalize_release(
             _impact_build(docs, k, k1_milli, b_milli, text_col, id_col))
 
@@ -851,8 +848,7 @@ def bm25_topk_from_index(index, queries: dict[int, list[str]],
     from ..functions.layout import (finalize_release, pinned_shuffle,
                                     plan_width)
 
-    with pinned_shuffle(index.sparkSession, plan_width(index, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(index.sparkSession, plan_width(index, floor=8)):
         return finalize_release(_bm25_from_index_build(index, queries, k))
 
 
@@ -1060,8 +1056,7 @@ def expand_queries(docs, queries: dict[int, list[str]], k_fb: int = 5,
                                     pinned_shuffle, plan_width)
 
     spark = docs.sparkSession
-    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8),
-                        adaptive=False):
+    with pinned_shuffle(docs.sparkSession, plan_width(docs, floor=8)):
         # ONE corpus tokenize for the whole two-pass pipeline
         # (round-11): the cached (doc, dl, term, tf) table feeds the
         # first BM25 pass, the feedback-term scoring, AND the second

@@ -241,9 +241,9 @@ def bpe_train(docs: DataFrame, n_merges: int = 20,
     base = _with_syms(word_freqs(docs, text_col))
     width = plan_width(base, floor=1)
     merges: list[tuple[str, str]] = []
-    # adaptive=False: with the width already stats-sized, AQE's
+    # AQE off: with the width already stats-sized, AQE's
     # per-stage materialize→re-optimize adds only latency × rounds
-    with pinned_shuffle(docs.sparkSession, width, adaptive=False):
+    with pinned_shuffle(docs.sparkSession, width):
         syms = base.localCheckpoint(eager=True)
         pending = 0  # rewrites since the last lineage cut
         # tie margin — see docstring.  (Round-12 measured rejection: an

@@ -677,7 +677,8 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.testdata import ensure_runtime_conf
-    from ..streaming.hourly import hourly_counts_stream, run_available_now
+    from ..streaming import run_bounded
+    from ..streaming.hourly import hourly_counts_stream
 
     ensure_runtime_conf(spark)
     # the file source needs a directory: expose the single-file table via a
@@ -695,7 +696,8 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = hourly_counts_stream(spark, src_dir, schema, ts_col="ts",
                                   ts_is_nanos=True)
-    return run_available_now(stream, spark).orderBy("hour_start")
+    return (run_bounded(stream, spark, mode="complete", prefix="hourly")
+            .orderBy("hour_start"))
 
 
 ORACLE_STREAM_HOURLY = """

@@ -1265,7 +1265,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
                  li.select(F.col("l_partkey").alias("src"),
                            (F.col("l_suppkey") + 10_000_000).alias("dst"))))
     edges.createOrReplaceTempView("rc_edges_v")
-    with pinned_shuffle(spark, plan_width(edges, floor=8), adaptive=False):
+    with pinned_shuffle(spark, plan_width(edges, floor=8)):
         return spark.sql("""
             WITH RECURSIVE reach(node, depth) AS (
               SELECT CAST(10000001 AS BIGINT) AS node, 0 AS depth

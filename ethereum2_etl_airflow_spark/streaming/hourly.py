@@ -16,12 +16,10 @@ by the watermark horizon, not history size.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-__all__ = ["hourly_counts_stream", "run_available_now"]
+__all__ = ["hourly_counts_stream"]
 
 
 def hourly_counts_stream(
@@ -53,16 +51,3 @@ def hourly_counts_stream(
                 "n", "start_block", "end_block")
     )
 
-
-def run_available_now(stream_df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Execute a streaming aggregate to completion over all currently
-    available input (one cron tick's worth of work) and return the result
-    as a batch DataFrame via an in-memory sink."""
-    from . import bounded_state
-
-    name = f"hourly_{uuid.uuid4().hex[:8]}"
-    with bounded_state(spark):
-        q = (stream_df.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination()
-    return spark.table(name)

@@ -3,7 +3,9 @@ stubbed Airflow — the real scheduler is an optional dependency."""
 
 from __future__ import annotations
 
+import os
 import sys
+import time
 import types
 from datetime import datetime
 
@@ -430,6 +432,54 @@ def test_daily_validators_load_reads_ds_snapshot(stub_airflow, spark, tmp_path):
     assert [r["block_date"].isoformat()
             for r in out.select("block_date").distinct().collect()] == [
         "2024-01-01"]
+
+
+def test_daily_blocks_committees_loads_read_only_ds(stub_airflow, spark,
+                                                    tmp_path):
+    """The daily blocks and committees loads read ds's staged partition
+    only: loading a newer ds adds its warehouse partition and leaves an
+    older date's files as they were (same names, same mtimes)."""
+    from ethereum2_etl_airflow_spark.dags import build_load_dag
+    from ethereum2_etl_airflow_spark.sources.fixtures import (
+        gen_beacon_blocks, gen_beacon_committees)
+    from ethereum2_etl_airflow_spark.sources.ndjson import stage_export
+
+    staging, warehouse = str(tmp_path / "stage"), str(tmp_path / "wh")
+    # 288 slots x 300 s and 9 epochs x 32 slots x 300 s are one day
+    genesis, sps = 1704067200, 300
+    stage_export(gen_beacon_blocks(spark, 2 * 288, genesis=genesis,
+                                   secs_per_slot=sps),
+                 staging, "beacon_blocks", "block_timestamp")
+    stage_export(gen_beacon_committees(spark, 18, genesis=genesis,
+                                       secs_per_slot=sps),
+                 staging, "beacon_committees", "epoch_timestamp")
+
+    cfg = read_load_config({"eth2_mainnet_output_bucket": "gs://bkt"})
+    dag = build_load_dag(cfg, spark_factory=lambda: spark,
+                         staging_root=staging, warehouse_root=warehouse)
+    tasks = {t.task_id: t for t in dag.tasks}
+
+    def files(table, day):
+        d = os.path.join(warehouse, table, f"block_date={day}")
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns
+                for f in os.listdir(d)}
+
+    for table, per_day in (("beacon_blocks", 288),
+                           ("beacon_committees", 36)):
+        load = tasks[f"load_{table}"].python_callable
+        load(ds="2024-01-01")
+        out = spark.read.parquet(f"{warehouse}/{table}")
+        assert [r["block_date"].isoformat() for r in
+                out.select("block_date").distinct().collect()] == [
+            "2024-01-01"]
+        old = files(table, "2024-01-01")
+        time.sleep(0.05)
+        load(ds="2024-01-02")
+        assert files(table, "2024-01-01") == old
+        counts = {r["block_date"].isoformat(): r["count"] for r in
+                  spark.read.parquet(f"{warehouse}/{table}")
+                  .groupBy("block_date").count().collect()}
+        assert counts == {"2024-01-01": per_day, "2024-01-02": per_day}
 
 
 def test_hourly_export_dag_four_task_surface(stub_airflow):

@@ -17,6 +17,9 @@ BUDGETS = {
     "sessionize_stream": (7, 9),
     "bpe_merges": (11, 19),
     "retrieval_mmr": (10, 10),
+    "stream_hourly": (5, 6),
+    "stream_join_outer": (6, 8),
+    "dedup_stream": (5, 6),
 }
 
 

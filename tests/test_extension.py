@@ -231,10 +231,10 @@ def test_connected_components_star_matches_label(spark):
 
 
 def test_connected_components_restores_session_conf(spark):
-    """The CC loops pin (session width, adaptive=False) internally
-    (round-11: AQE turned every per-round checkpoint exchange into its
-    own job).  The pin must restore BOTH knobs on exit — including when
-    the caller already holds a pin of its own — and the pinned run must
+    """The CC loops pin AQE off internally (round-11: AQE turned every
+    per-round checkpoint exchange into its own job).  The pin must
+    leave width and AQE as they were on exit — including when the
+    caller already holds a pin of its own — and the pinned run must
     label identically to an unpinned session (layout-only contract)."""
     from ethereum2_etl_airflow_spark.functions.layout import pinned_shuffle
     from ethereum2_etl_airflow_spark.operators.graph import connected_components
@@ -250,14 +250,15 @@ def test_connected_components_restores_session_conf(spark):
         assert got == expect
         assert spark.conf.get("spark.sql.shuffle.partitions") == width0
         assert spark.conf.get("spark.sql.adaptive.enabled") == adapt0
-        # nested under a caller pin: inner adaptive=False is honored and
-        # the outer holder's width survives the inner exit
+        # nested under a caller pin: the outer holder's width and AQE
+        # setting survive the inner exit
         with pinned_shuffle(spark, 5):
             got = {(r["node"], r["component"])
                    for r in connected_components(edges,
                                                  algorithm=algo).collect()}
             assert got == expect
             assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == width0
         assert spark.conf.get("spark.sql.adaptive.enabled") == adapt0
 

@@ -350,7 +350,7 @@ def test_sparse_cosine_pinned_width_and_join_shape(spark, sf_dir):
     from ethereum2_etl_airflow_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    with pinned_shuffle(spark, 7, adaptive=False):
+    with pinned_shuffle(spark, 7):
         res, tc = _sparse_cosine_build(docs, "source", 650,
                                        "text", "doc_id", width=7)
         plan = plan_string(res, "simple")
@@ -380,7 +380,7 @@ def test_sparse_cosine_gemm_plan_shape(spark, sf_dir):
     from ethereum2_etl_airflow_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    with pinned_shuffle(spark, 7, adaptive=False):
+    with pinned_shuffle(spark, 7):
         res = _sparse_cosine_gemm_build(docs, "source", 650,
                                         "text", "doc_id")
         plan = plan_string(res, "simple")
@@ -406,7 +406,7 @@ def test_bm25_plan_shape(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     w = plan_width(docs, floor=8)
-    with pinned_shuffle(spark, w, adaptive=False):
+    with pinned_shuffle(spark, w):
         df = _bm25_build(docs, {1: ["dup", "hash"]}, 5, 1200, 750,
                          "text", "doc_id")
         plan = plan_string(df, "simple")
@@ -434,7 +434,7 @@ def test_impact_postings_plan_no_python_scoring(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     w = plan_width(docs, floor=8)
-    with pinned_shuffle(spark, w, adaptive=False):
+    with pinned_shuffle(spark, w):
         df = _impact_build(docs, 4, 1200, 750, "text", "doc_id")
         plan = plan_string(df, "simple")
         import re
@@ -705,7 +705,7 @@ def test_source_divergence_pinned_width(spark, sf_dir):
     from ethereum2_etl_airflow_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    with pinned_shuffle(spark, 7, adaptive=False):
+    with pinned_shuffle(spark, 7):
         res, counts = _source_divergence_build(docs, "source", "text",
                                                None)
         plan = plan_string(res, "simple")
@@ -728,7 +728,7 @@ def test_inverted_postings_pinned_width(spark, sf_dir):
     from ethereum2_etl_airflow_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    with pinned_shuffle(spark, 7, adaptive=False):
+    with pinned_shuffle(spark, 7):
         res, tf = _inverted_postings_build(docs, 8, "text", "doc_id")
         plan = plan_string(res, "simple")
     widths = {int(n) for n in

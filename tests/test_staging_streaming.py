@@ -55,9 +55,9 @@ def test_stage_export_hourly_layout_and_latest(spark, tmp_path):
 def test_streaming_picks_up_new_files(spark, tmp_path):
     """Two availableNow runs: the second sees files staged after the
     first — the sensor-less incremental load (SURVEY §2.7 O6)."""
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
     from ethereum2_etl_airflow_spark.streaming.hourly import (
-        hourly_counts_stream, run_available_now,
-    )
+        hourly_counts_stream)
 
     src = str(tmp_path / "stream_src")
     os.makedirs(src)
@@ -69,11 +69,11 @@ def test_streaming_picks_up_new_files(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = hourly_counts_stream(spark, src, schema, ts_col="ts",
                                   ts_is_nanos=False)
-    r1 = run_available_now(stream, spark)
+    r1 = run_bounded(stream, spark, mode="complete", prefix="hourly")
     assert r1.agg(F.sum("n")).first()[0] == 500
 
     second.write.mode("append").parquet(src)
-    r2 = run_available_now(stream, spark)
+    r2 = run_bounded(stream, spark, mode="complete", prefix="hourly")
     assert r2.agg(F.sum("n")).first()[0] == 1000
     # per-hour rows equal the batch aggregate
     batch = (ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
@@ -589,91 +589,107 @@ def test_sessionize_tws_matches_batch(spark, tmp_path):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
+class _CountingSession:
+    """Dict-backed stand-in for a session's conf that records every
+    set/unset, to count restores."""
+
+    def __init__(self, conf):
+        self.conf, self._d, self.calls = self, dict(conf), []
+
+    def get(self, k, default=None):
+        return self._d.get(k, default)
+
+    def set(self, k, v):
+        self.calls.append(("set", k, v))
+        self._d[k] = v
+
+    def unset(self, k):
+        self.calls.append(("unset", k))
+        self._d.pop(k, None)
+
+
 def test_pinned_shuffle_reentrant_and_threadsafe(spark):
-    """The shared conf pin (bounded_state / iterative-loop widths) is
-    reference-counted: overlapping holders never leave the session
-    pinned after the last exit, nested holders keep the outermost pin,
-    and an inner exit does not restore early."""
+    """``pinned_conf`` (behind ``pinned_shuffle`` and every stream
+    start) counts holders per key: nested holders keep the outermost
+    value, an inner exit does not restore early, concurrent holders
+    restore exactly once, and a key unset before the pin is unset
+    again after it."""
+    import sys
     import threading
 
-    from ethereum2_etl_airflow_spark.functions.layout import pinned_shuffle
+    from ethereum2_etl_airflow_spark.functions.layout import (
+        pinned_conf, pinned_shuffle)
 
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    with pinned_shuffle(spark, 3):
+    key, akey = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    before, abefore = spark.conf.get(key), spark.conf.get(akey)
+    with pinned_conf(spark, {key: 3}):
         assert spark.conf.get(key) == "3"
-        with pinned_shuffle(spark, 5):        # nested: outermost wins
+        with pinned_conf(spark, {key: 5}):  # nested: outermost wins
             assert spark.conf.get(key) == "3"
         assert spark.conf.get(key) == "3"     # inner exit didn't restore
-    assert spark.conf.get(key) == before
-
-    # concurrent holders: whatever the interleaving, the value during
-    # overlap is a pin (some holder's), and after ALL exit it restores
-    n_threads, inside = 8, []
-    barrier = threading.Barrier(n_threads)
-
-    def worker():
-        barrier.wait()
-        with pinned_shuffle(spark, 7):
-            inside.append(spark.conf.get(key))
-
-    ts = [threading.Thread(target=worker) for _ in range(n_threads)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert all(v == "7" for v in inside)
-    assert spark.conf.get(key) == before
-
-    # adaptive pin restores too
-    akey = "spark.sql.adaptive.enabled"
-    abefore = spark.conf.get(akey)
-    with pinned_shuffle(spark, 2, adaptive=False):
-        assert spark.conf.get(akey) == "false"
-    assert spark.conf.get(akey) == abefore
-
-    # an inner adaptive=False request under a width-only outer pin is
-    # honored and restored when the inner (last adaptive) holder exits
-    # — round-6 advice: it used to be silently dropped
-    with pinned_shuffle(spark, 3):
-        with pinned_shuffle(spark, 5, adaptive=False):
+        # keys are counted independently: an inner holder of a second
+        # key pins and restores it while the outer width stays
+        with pinned_shuffle(spark, 5):
             assert spark.conf.get(akey) == "false"
-            assert spark.conf.get(key) == "3"   # width: outermost wins
-        assert spark.conf.get(akey) == abefore  # adaptive restored early
+            assert spark.conf.get(key) == "3"
+        assert spark.conf.get(akey) == abefore
         assert spark.conf.get(key) == "3"
     assert spark.conf.get(key) == before
 
-    # broadcast-threshold knob (round-7 advice: kcore's naive
-    # save/restore raced concurrent holders): first non-None holder
-    # saves, last restores; nested raise under a width-only pin works
-    tkey = "spark.sql.autoBroadcastJoinThreshold"
-    tbefore = spark.conf.get(tkey)
-    with pinned_shuffle(spark, 3):
-        with pinned_shuffle(spark, 5, broadcast_threshold="128m"):
-            assert spark.conf.get(tkey) == "128m"
-            with pinned_shuffle(spark, 7, broadcast_threshold="256m"):
-                # conflicting nested values: the first holder wins
-                assert spark.conf.get(tkey) == "128m"
-            assert spark.conf.get(tkey) == "128m"
-        assert spark.conf.get(tkey) == tbefore  # restored by last holder
-    assert spark.conf.get(tkey) == tbefore
+    # concurrent holders on the real session: every holder reads a pin
+    # while all of them hold it, and the last exit restores
+    n_threads, inside = 8, []
+    barrier = threading.Barrier(n_threads, timeout=60)
 
-    # concurrent threshold holders restore exactly once
-    inside2 = []
-    barrier2 = threading.Barrier(n_threads)
+    def worker(sess, out):
+        barrier.wait()
+        with pinned_conf(sess, {key: 7}):
+            barrier.wait()
+            out.append(sess.conf.get(key))
+            barrier.wait()
 
-    def worker2():
-        barrier2.wait()
-        with pinned_shuffle(spark, 7, broadcast_threshold="64m"):
-            inside2.append(spark.conf.get(tkey))
+    def run_threads(sess, out):
+        ts = [threading.Thread(target=worker, args=(sess, out))
+              for _ in range(n_threads)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)  # interleave the holders finely
+        try:
+            for t in ts:
+                t.start()
+            for t in ts:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in ts)
 
-    ts = [threading.Thread(target=worker2) for _ in range(n_threads)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert all(v == "64m" for v in inside2)
-    assert spark.conf.get(tkey) == tbefore
+    run_threads(spark, inside)
+    assert inside == ["7"] * n_threads
+    assert spark.conf.get(key) == before
+
+    # ...and the same interleaving sets and restores exactly once
+    fake, seen = _CountingSession({key: "8"}), []
+    run_threads(fake, seen)
+    assert seen == ["7"] * n_threads
+    assert fake.calls == [("set", key, "7"), ("set", key, "8")]
+
+    # a key unset before the pin is unset again afterwards (the
+    # run_bounded(flush=False) noDataMicroBatches path)
+    nkey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(nkey, None)
+    spark.conf.unset(nkey)
+    try:
+        with pinned_conf(spark, {nkey: "false"}):
+            with pinned_conf(spark, {nkey: "true"}):
+                assert spark.conf.get(nkey) == "false"
+            assert spark.conf.get(nkey) == "false"
+        assert spark.conf.get(nkey, None) is None
+        fake = _CountingSession({})
+        with pinned_conf(fake, {nkey: "false"}):
+            pass
+        assert fake.calls == [("set", nkey, "false"), ("unset", nkey)]
+    finally:
+        if prev is not None:
+            spark.conf.set(nkey, prev)
 
 
 def test_pinned_shuffle_state_is_per_session(spark):
@@ -681,13 +697,13 @@ def test_pinned_shuffle_state_is_per_session(spark):
     be keyed per session (round-6 advice: a module-global refcount
     silently skipped pinning the second session and restored the first
     session's saved conf into it)."""
-    from ethereum2_etl_airflow_spark.functions.layout import pinned_shuffle
+    from ethereum2_etl_airflow_spark.functions.layout import pinned_conf
 
     key = "spark.sql.shuffle.partitions"
     other = spark.newSession()
     before_a, before_b = spark.conf.get(key), other.conf.get(key)
-    with pinned_shuffle(spark, 3):
-        with pinned_shuffle(other, 5):
+    with pinned_conf(spark, {key: 3}):
+        with pinned_conf(other, {key: 5}):
             # each session pinned to ITS OWN value, not the outer's
             assert spark.conf.get(key) == "3"
             assert other.conf.get(key) == "5"
@@ -799,3 +815,71 @@ def test_run_bounded_drops_its_memory_sink(spark, tmp_path):
     assert first == [(1, 1), (4, 1), (7, 1), (10, 1)]
     assert sorted(map(tuple, out.collect())) == first
     assert out.groupBy("k").count().collect()[0]["count"] == 4
+
+
+def test_run_bounded_concurrent_flush_runs_keep_their_own_conf(spark,
+                                                                 tmp_path):
+    """A ``flush=False`` run and a ``flush=True`` run started while the
+    first is still running, in one session under ``parallel_frames``:
+    the flush=True outer join still emits its watermark-released null
+    rows (each stream keeps the conf it started with), and the
+    session's no-data-batch setting is restored afterwards."""
+    import shutil
+    import time
+    from datetime import datetime, timedelta
+
+    from ethereum2_etl_airflow_spark.functions.layout import parallel_frames
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
+    from ethereum2_etl_airflow_spark.streaming.join import (
+        attribution_join, attribution_join_outer)
+
+    # real clicks/purchases, then a sentinel pair 5 h later whose
+    # watermark closes over every real click
+    t0 = datetime(2024, 1, 1, 0, 0, 0)
+    files = [[(i, i % 3, "click", t0 + timedelta(minutes=i))
+              for i in range(6)]
+             + [(100, 0, "purchase", t0 + timedelta(minutes=10))],
+             [(-10, -1, "click", t0 + timedelta(hours=5)),
+              (-11, -1, "purchase", t0 + timedelta(hours=5))]]
+    src = str(tmp_path / "ev")
+    os.makedirs(src)
+    for i, rows in enumerate(files):
+        tmp = str(tmp_path / f"w{i}")
+        spark.createDataFrame(
+            rows, "event_id long, user_id long, event_type string, "
+                  "ts timestamp").coalesce(1).write.parquet(tmp)
+        part = next(p for p in os.listdir(tmp) if p.startswith("part-"))
+        dest = os.path.join(src, f"{i}.parquet")
+        shutil.copyfile(os.path.join(tmp, part), dest)
+        os.utime(dest, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+
+    def stream(per_file=False):
+        r = spark.readStream.schema(
+            "event_id long, user_id long, event_type string, ts timestamp")
+        if per_file:
+            r = r.option("maxFilesPerTrigger", 1)
+        s = r.parquet(src)
+        return (s.where(F.col("event_type") == "click"),
+                s.where(F.col("event_type") == "purchase"))
+
+    def outer():
+        return sorted(map(tuple, run_bounded(
+            attribution_join_outer(*stream()), spark, prefix="cfo")
+            .collect()), key=repr)
+
+    def inner():
+        return run_bounded(attribution_join(*stream(per_file=True)), spark,
+                           prefix="cfi", flush=False).collect()
+
+    def late_outer():
+        time.sleep(0.3)
+        return outer()
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, None)
+    expected = outer()
+    assert sum(r[2] is None for r in expected) == 4  # released nulls
+    got_inner, got_outer = parallel_frames(inner, late_outer)
+    assert got_outer == expected
+    assert len(got_inner) == 3  # user 0's two pairs + the sentinel
+    assert spark.conf.get(key, None) == before
