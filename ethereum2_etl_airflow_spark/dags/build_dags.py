@@ -328,12 +328,6 @@ def build_load_dag(cfg: LoadConfig, spark_factory: Callable,
         catchup=cfg.load_end_date is not None,
     )
 
-    # full-history staged NDJSON for an hourly load — ADVICE fix: the
-    # hourly tree has an extra hour=HH level, so the glob is deeper
-    def staged_glob(src_table: str) -> str:
-        return staging_path(staging_root, src_table,
-                            hourly=True) + "/*/*/*.json"
-
     # the O6 sensor pokes ONE tick's partition, like the reference's
     # `block_date={{ds}}` object poke (build_load_dag.py:71) — ds/hour
     # default to Airflow template placeholders so FileSensor templating
@@ -357,13 +351,15 @@ def build_load_dag(cfg: LoadConfig, spark_factory: Callable,
                 write_latest_snapshot(
                     df, f"{warehouse_root}/beacon_validators_latest")
                 return
-            # a daily load reads ds's staged partition only, as in the
-            # reference (build_load_dag.py:88-90,127): dynamic overwrite
-            # replaces ds's warehouse partition and leaves older dates
-            # untouched, and a backfill loads ds's validators snapshot,
-            # not the newest one staged
-            src = (staged_glob(src_table) if hourly else
-                   staging_path(staging_root, src_table, ds) + "/*.json")
+            # a load reads ds's staged partition only (an hourly load:
+            # every hour=HH directory of ds), as in the reference
+            # (build_load_dag.py:88-90,127): dynamic overwrite replaces
+            # ds's warehouse partition and leaves older dates untouched,
+            # and a backfill loads ds's validators snapshot, not the
+            # newest one staged
+            src = staging_path(staging_root, src_table, ds,
+                               hourly=hourly) + ("/*/*.json" if hourly
+                                                 else "/*.json")
             df = read_ndjson(spark, src, beacon_schema(src_table))
             if table == "beacon_validators_hourly":
                 # point-in-time table: (block_date, hour) partitions so a

@@ -132,10 +132,8 @@ def plan_width(df: DataFrame, floor: int = 8,
         int(df.sparkSession.conf.get("spark.sql.shuffle.partitions",
                                      "200") or 200),
         df.sparkSession.sparkContext.defaultParallelism)
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:  # pragma: no cover — stats API unavailable
+    size = plan_bytes(df)
+    if size is None:
         return conf
     return min(conf, max(-(-size // target_bytes), floor))
 

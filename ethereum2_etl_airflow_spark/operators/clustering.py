@@ -114,7 +114,8 @@ def _cent_array_sql(cents: list[list[int]]) -> str:
     (no per-round Janino recompile) and the matrix is materialized
     once, not per evaluation."""
     return "array(" + ",".join(
-        "array(" + ",".join(f"{c}L" for c in cq) + ")"
+        "array(" + ",".join("NULL" if c is None else f"{c}L"
+                            for c in cq) + ")"
         for cq in cents) + ")"
 
 
@@ -129,7 +130,8 @@ def _best_struct_sql(cents: list[list[int]]) -> str:
     k×dim CreateArray would be re-built per evaluation.  As the input
     it folds to one reference object; the per-row cost is k×dim
     interpreted-HOF integer ops — bounded by the codebook size, scan
-    stays narrow and JVM-side.
+    stays narrow and JVM-side.  A NULL element (of ``q`` or ``cq``)
+    adds nothing to the distance, as the SQL oracle's ``SUM`` skips it.
 
     (Rejected round-10 alternatives, measured at sf0.1: fully unrolled
     ``least(named_struct(…element_at(q,i)*c…))`` codegen — fastest per
@@ -139,7 +141,8 @@ def _best_struct_sql(cents: list[list[int]]) -> str:
     """
     return (f"array_min(transform({_cent_array_sql(cents)}, "
             f"(cq, r) -> named_struct("
-            f"'d', aggregate(zip_with(q, cq, (a, c) -> (a-c)*(a-c)), "
+            f"'d', aggregate(zip_with(q, cq, "
+            f"(a, c) -> coalesce((a-c)*(a-c), 0L)), "
             f"0L, (s, x) -> s+x), 'r', r)))")
 
 
@@ -152,7 +155,8 @@ def _probe_sort_sql(cents: list[list[int]]) -> str:
     and the assignment argmin can never disagree."""
     return (f"array_sort(transform({_cent_array_sql(cents)}, "
             f"(cq, r) -> named_struct("
-            f"'d', aggregate(zip_with(q, cq, (a, c) -> (a-c)*(a-c)), "
+            f"'d', aggregate(zip_with(q, cq, "
+            f"(a, c) -> coalesce((a-c)*(a-c), 0L)), "
             f"0L, (s, x) -> s+x), 'r', r)))")
 
 
@@ -181,7 +185,8 @@ def _assign_literal(qdf: DataFrame, cents: list[list[int]],
 
 def _centroid_df(spark, cents: list[list[int]]) -> DataFrame:
     return local_frame(
-        spark, [(r, [int(c) for c in cq]) for r, cq in enumerate(cents)],
+        spark, [(r, [c if c is None else int(c) for c in cq])
+                for r, cq in enumerate(cents)],
         "r int, cq array<bigint>")
 
 
@@ -195,7 +200,7 @@ def _seed_centroids(qdf: DataFrame, k: int,
         qdf.orderBy(hx, F.col(id_col)).limit(k)
         .select(hx.alias("__hx"), F.col(id_col).alias("__id"), "q")
         .collect(), key=lambda r: (r["__hx"], r["__id"]))
-    return [[int(v) for v in r["q"]] for r in rows]
+    return [[None if v is None else int(v) for v in r["q"]] for r in rows]
 
 
 def kmeans_fit_centroids(qdf: DataFrame, k: int, n_iter: int,
@@ -229,6 +234,12 @@ def kmeans_fit_centroids(qdf: DataFrame, k: int, n_iter: int,
     product ≤ 127²·dim ≪ 2^53 — the float64 BLAS distance matmul is
     integer-exact (the sparse_cosine proof), argmin ties break to the
     FIRST (lowest-rank) centroid, and the update sums run in int64.
+    NULL elements follow the SQL oracle: a distance term with a NULL
+    side is skipped, a NULL adds 0 to its cell's sum but counts in the
+    member count, and a cell whose members are all NULL at a position
+    keeps its previous value there.  The integer cast of the sums runs
+    with numpy's invalid-operation flag raised, so a NaN reaching it
+    fails the job instead of corrupting a centroid.
 
     The fit runs under a pinned shuffle width sized from ``qdf``'s own
     plan stats (pagerank/BPE discipline — the width only matters for
@@ -248,22 +259,31 @@ def kmeans_fit_centroids(qdf: DataFrame, k: int, n_iter: int,
         dim = len(cents[0])
         qonly = qdf.select("q")
         for _ in range(n_iter):
-            C = np.asarray(cents, dtype=np.float64)       # k×dim
-            cssq = (C * C).sum(axis=1)                    # k
+            C = np.asarray(cents, dtype=np.float64)       # k×dim, NaN=NULL
+            Cp = (~np.isnan(C)).astype(np.float64)        # present mask
+            C = np.nan_to_num(C)
 
-            def part_stats(batches, _C=C, _cssq=cssq):
+            def part_stats(batches, _C=C, _Cp=Cp):
                 S = np.zeros((k, dim), dtype=np.int64)
+                V = np.zeros((k, dim), dtype=np.int64)    # non-NULL count
                 n = np.zeros(k, dtype=np.int64)
                 for pdf in batches:
                     if not len(pdf):
                         continue
                     Q = np.array([np.asarray(v, dtype=np.float64)
                                   for v in pdf["q"]])
-                    # d = ||q||² − 2q·c + ||c||²; ||q||² is constant
-                    # per row, so argmin over (−2q·c + ||c||²) — every
-                    # term integer-valued < 2^53: float64 BLAS is exact
-                    a = np.argmin(Q @ (-2.0 * _C.T) + _cssq, axis=1)
-                    np.add.at(S, a, Q.astype(np.int64))
+                    P = ~np.isnan(Q)
+                    Q = np.where(P, Q, 0.0)
+                    # d = Σ (q − c)² over positions where both sides
+                    # are non-NULL = (q²)·c̄ + q̄·(c²) − 2q·c with the
+                    # masks q̄, c̄ — every term integer-valued < 2^53:
+                    # float64 BLAS is exact
+                    d = ((Q * Q) @ _Cp.T + P.astype(np.float64)
+                         @ (_C * _C).T - 2.0 * (Q @ _C.T))
+                    a = np.argmin(d, axis=1)
+                    with np.errstate(invalid="raise"):
+                        np.add.at(S, a, Q.astype(np.int64))
+                    np.add.at(V, a, P.astype(np.int64))
                     n += np.bincount(a, minlength=k)
                 keep = np.flatnonzero(n)
                 out = pd.DataFrame({"cluster": keep.astype("int32"),
@@ -273,20 +293,26 @@ def kmeans_fit_centroids(qdf: DataFrame, k: int, n_iter: int,
                 # NumPyConverter can't map to list<int64>
                 out["s"] = pd.Series([S[r].tolist() for r in keep],
                                      dtype="object")
+                out["v"] = pd.Series([V[r].tolist() for r in keep],
+                                     dtype="object")
                 yield out
 
             rows = qonly.mapInPandas(
                 part_stats,
-                "cluster int, n long, s array<long>").collect()
-            agg: dict[int, tuple[int, list[int]]] = {}
+                "cluster int, n long, s array<long>, v array<long>"
+            ).collect()
+            agg: dict[int, tuple[int, list[int], list[int]]] = {}
             for r in rows:  # ≤ k × partitions rows — codebook-sized
-                n0, s0 = agg.get(r["cluster"], (0, [0] * dim))
+                n0, s0, v0 = agg.get(r["cluster"],
+                                     (0, [0] * dim, [0] * dim))
                 agg[r["cluster"]] = (n0 + r["n"],
-                                     [x + y for x, y in zip(s0, r["s"])])
+                                     [x + y for x, y in zip(s0, r["s"])],
+                                     [x + y for x, y in zip(v0, r["v"])])
             cents = [
-                [_div_trunc(s, n) for s in sv] if r in agg else cq
+                [_div_trunc(s, n) if v else c
+                 for s, v, c in zip(sv, vv, cq)] if r in agg else cq
                 for r, cq in enumerate(cents)
-                for n, sv in [agg.get(r, (0, []))]]
+                for n, sv, vv in [agg.get(r, (0, [], []))]]
     return cents
 
 

@@ -32,6 +32,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.layout import (finalize_release, pinned_conf,
+                                pinned_shuffle, plan_bytes, plan_width)
+
 __all__ = ["connected_components", "pagerank_int", "triangle_counts",
            "cluster_survivors", "kcore_peel", "random_walks"]
 
@@ -47,32 +50,6 @@ def _release_round_blocks() -> None:
     import gc
 
     gc.collect()
-
-
-def _graph_npart(edges: DataFrame, floor: int = 8,
-                 target_bytes: int = 64 << 20) -> int:
-    """Iteration-layout partition count for an edge DataFrame: sized
-    from Catalyst's free plan-time size estimate (``optimizedPlan().
-    stats().sizeInBytes`` — the same quantity file scans size
-    partitions from) at ~``target_bytes`` per partition, clamped to
-    [``floor``, session shuffle width].  At 100 TB the estimate is
-    huge and the width caps at the configured maximum; at test SFs the
-    graph is a few MB and the width drops to the floor.
-
-    Why not just ``spark.sql.shuffle.partitions``: an iterative
-    operator pays EVERY round for over-partitioning (per-task launch +
-    state-store/shuffle-file fixed costs × rounds), and the pinned
-    ``repartition(n, key)`` layout is deliberately AQE-exempt (the
-    coalescing that fixes one-shot queries broke shuffled-hash builds
-    in the round-4 scale probe), so the width must be right at plan
-    time.  Measured at sf0.1: 64 pinned partitions cost 7–13 s for a
-    1.2 M-edge pagerank whose 8-partition run is ~4 s — pure fixed
-    overhead, zero data benefit.  Thin wrapper over
-    :func:`..functions.layout.plan_width` (shared with the other
-    bounded iterative loops)."""
-    from ..functions.layout import plan_width
-
-    return plan_width(edges, floor=floor, target_bytes=target_bytes)
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -98,8 +75,6 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     # 25 jobs for a 3-round propagation vs 11 with the pin, values
     # bit-identical.  The width stays the session's (no layout change —
     # AQE had nothing left to decide at these widths).
-    from ..functions.layout import pinned_conf
-
     with pinned_conf(edges.sparkSession,
                      {"spark.sql.adaptive.enabled": "false"}):
         return _connected_components_label(edges, src, dst, max_iter)
@@ -198,8 +173,6 @@ def _connected_components_star(edges: DataFrame, src: str, dst: str,
     checkpoint, and AQE turned every one of those exchanges into its
     own per-stage job — measured at sf0.1, 40 jobs for a 3-round run
     vs 12 with the pin, values bit-identical."""
-    from ..functions.layout import pinned_conf
-
     with pinned_conf(edges.sparkSession,
                      {"spark.sql.adaptive.enabled": "false"}):
         return _cc_star_loop(edges, src, dst, max_iter)
@@ -240,8 +213,7 @@ def _cc_star_loop(edges: DataFrame, src: str, dst: str,
 def triangle_counts(edges: DataFrame, src: str = "id_a",
                     dst: str = "id_b",
                     assume_canonical: bool = False,
-                    broadcast_degrees: bool = False,
-                    wedge_partitions: int | None = None) -> DataFrame:
+                    broadcast_degrees: bool = False) -> DataFrame:
     """(node, n_triangles) for every node on at least one triangle —
     the local clustering signal of a near-dup / co-occurrence graph
     (triangle-dense neighborhoods are mutually-similar clusters;
@@ -279,13 +251,7 @@ def triangle_counts(edges: DataFrame, src: str = "id_a",
     groupBy.  At web scale leave False: degrees attach via one melt
     join + one regroup (two exchanges of the 2|E| melt instead of the
     naive two sequential per-endpoint joins), and the close
-    shuffle-hashes with the adjacency as the build side.
-    ``wedge_partitions`` overrides the width of the adjacency stage;
-    default is ``max(spark.sql.shuffle.partitions,
-    2 × defaultParallelism)`` — the quadratic intersect stage must run
-    at full machine width even when the session tunes shuffle
-    partitions low for its many small queries."""
-    from ..functions.layout import finalize_release
+    shuffle-hashes with the adjacency as the build side."""
     if assume_canonical:
         # caller guarantees src < dst and no duplicates — skip the
         # re-canonicalization exchange (a full extra shuffle of the
@@ -302,8 +268,6 @@ def triangle_counts(edges: DataFrame, src: str = "id_a",
            .groupBy("n").agg(F.count("*").alias("deg")))
     # orient by (deg, id): strict total order, so each edge gets exactly
     # one direction and each triangle exactly one (u; v, w) wedge + edge
-    from ..functions.layout import plan_bytes
-
     # stats-gated degree broadcast (round-11): when Catalyst's free
     # plan-time estimate says the edge set is small, the degree table
     # (≤ 2 rows per edge, 16 B each) certainly broadcasts — both
@@ -341,31 +305,15 @@ def triangle_counts(edges: DataFrame, src: str = "id_a",
     a_first = ((F.col("deg_a") < F.col("deg_b"))
                | ((F.col("deg_a") == F.col("deg_b"))
                   & (F.col("a") < F.col("b"))))
-    sc = edges.sparkSession.sparkContext
-    if wedge_partitions:
-        npart = wedge_partitions
-    else:
-        # stats-sized with a deliberately SMALL per-partition target
-        # (the intersect stage does ~m^1.5 work on m bytes, so it
-        # wants more slices per byte than a linear scan), capped at
-        # the old full-machine-width default (round-10: the fixed
-        # 2×parallelism default cost ~0.7 s of task-launch overhead
-        # at test SFs — measured sweep 64/32/16/8 → 3.9/3.4/3.2/4.6 s)
-        cap = max(
-            int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions",
-                                            "200") or 200),
-            sc.defaultParallelism * 2)
-        # floor at HALF the machine width, not a constant 8: the
-        # intersect stage is CPU-bound (m^1.5 comparisons on m bytes),
-        # so even a few-MB graph wants real cores — measured at sf0.1
-        # on 32 cores the close reads 1.96/1.24/1.34 s at widths
-        # 8/16/32.  defaultParallelism scales the floor down on the
-        # driver's lower-core bench runs and is irrelevant at cluster
-        # scale where the stats term exceeds it.
-        size = plan_bytes(canon)
-        floor = max(8, sc.defaultParallelism // 2)
-        npart = cap if size is None else \
-            min(cap, max(floor, -(-size // (2 << 20))))
+    # stats-sized with a deliberately SMALL per-partition target (the
+    # intersect stage does ~m^1.5 work on m bytes, so it wants more
+    # slices per byte than a linear scan; round-10 sweep at test SFs
+    # 64/32/16/8 → 3.9/3.4/3.2/4.6 s), floored at HALF the machine
+    # width, not a constant 8: the stage is CPU-bound, so even a
+    # few-MB graph wants real cores (sf0.1 on 32 cores: 1.96/1.24/
+    # 1.34 s at widths 8/16/32)
+    dp = edges.sparkSession.sparkContext.defaultParallelism
+    npart = plan_width(canon, floor=max(8, dp // 2), target_bytes=2 << 20)
     oriented = ranked.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"))
@@ -422,8 +370,7 @@ def triangle_counts(edges: DataFrame, src: str = "id_a",
 
 def pagerank_int(edges: DataFrame, n_iter: int = 3,
                  scale: int = 1_000_000, damp_num: int = 85,
-                 damp_den: int = 100, checkpoint_every: int = 3,
-                 dedup: bool = True) -> DataFrame:
+                 damp_den: int = 100) -> DataFrame:
     """Integer-scaled PageRank over a directed edge list (``src``,
     ``dst`` columns) — the iterative-algorithm companion of
     :func:`connected_components`.
@@ -453,22 +400,24 @@ def pagerank_int(edges: DataFrame, n_iter: int = 3,
     on dst.  Dangling nodes (no in-edges) settle at the teleport base.
     At 100 TB this is the same per-round cost envelope as label
     propagation; n_iter is fixed, not convergence-probed, to keep the
-    oracle exact.  ``dedup=False`` skips the edge ``distinct`` when
-    the caller guarantees uniqueness (duplicate edges would double
-    contributions AND out-degrees — NOT a no-op semantically).
+    oracle exact.
 
-    ``checkpoint_every``: rounds between ``localCheckpoint`` lineage
-    cuts.  Checkpointing EVERY round paid a per-round driver
+    The width is :func:`..functions.layout.plan_width` of the edges,
+    not the session's: an iterative operator pays every round for
+    over-partitioning, and the pinned ``repartition(n, key)`` layout
+    is AQE-exempt, so the width must be right at plan time (sf0.1: 64
+    pinned partitions cost 7–13 s for a 1.2 M-edge run whose
+    8-partition run is ~4 s).
+
+    Lineage is cut with ``localCheckpoint`` every 3 rounds, not every
+    round: checkpointing EVERY round paid a per-round driver
     job-submission + GC floor that dominated the wall at small data
-    (8.8 s vs a 0.4 s oracle at sf0.1 — round-5 verdict); batching k
-    rounds per materialization keeps lineage bounded at k joins while
-    the k rounds plan and run as ONE Spark job.  The final round is
-    always checkpointed so the returned frame survives the edge/node
-    cache release below."""
-    from ..functions.layout import pinned_shuffle
-
+    (8.8 s vs a 0.4 s oracle at sf0.1); between cuts the rounds plan
+    and run as ONE Spark job.  The final round is always checkpointed
+    so the returned frame survives the edge/node cache release
+    below."""
     base = scale - damp_num * scale // damp_den
-    npart = _graph_npart(edges)
+    npart = plan_width(edges)
     spark = edges.sparkSession
     # the whole build runs under the stats-sized width (same discipline
     # as the BPE/kcore loops): without the pin the per-round
@@ -485,9 +434,8 @@ def pagerank_int(edges: DataFrame, n_iter: int = 3,
     # same 1.2 M-edge graph) — the same rationale as the BPE/k-means
     # loops, which already run with AQE off.
     with pinned_shuffle(spark, npart):
-        e = edges.select("src", "dst").repartition(npart, "src")
-        if dedup:
-            e = e.distinct()  # co-located: hash(src) clusters (src, dst)
+        # distinct is co-located: hash(src) clusters (src, dst)
+        e = edges.select("src", "dst").repartition(npart, "src").distinct()
         ed = e.withColumn("deg", F.count("*")
                           .over(Window.partitionBy("src"))).persist()
         # Materialize ed BEFORE the union below references it twice: a
@@ -520,7 +468,7 @@ def pagerank_int(edges: DataFrame, n_iter: int = 3,
                                    + F.expr(f"({damp_num} * coalesce(s, 0))"
                                             f" div {damp_den}"))
                                   .cast("bigint").alias("score")))
-                if (i + 1) % checkpoint_every == 0 or i == n_iter - 1:
+                if (i + 1) % 3 == 0 or i == n_iter - 1:
                     scores = scores.localCheckpoint(eager=True)
                     _release_round_blocks()
             return scores
@@ -631,8 +579,6 @@ def kcore_peel(edges: DataFrame, k: int = 3, n_rounds: int = 4,
     is ``localCheckpoint``-ed (|V| rows — orders of magnitude smaller
     than the old |E| checkpoints) because each round's table feeds two
     consumers (the removed probe and the next update)."""
-    from ..functions.layout import pinned_conf
-
     # 8 MB/partition, not the 64 MB scan default: the peel SYMMETRIZES
     # the input (2×) and the initial degree count groups the whole
     # working set, so per-task footprint — not scan bytes — is the
@@ -641,7 +587,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, n_rounds: int = 4,
     # under-parallel and spill-bound); small graphs still hit the
     # floor, huge ones still cap at the session width
     spark = edges.sparkSession
-    npart = _graph_npart(edges, target_bytes=8 << 20)
+    npart = plan_width(edges, target_bytes=8 << 20)
     with pinned_conf(spark, {"spark.sql.shuffle.partitions": npart,
                              "spark.sql.autoBroadcastJoinThreshold": "128m"}):
         e = (edges.select(F.col(src).cast("long").alias("u"),
@@ -775,8 +721,6 @@ def random_walks(edges: DataFrame, walk_len: int = 4,
         cur = j.select(
             "walk_id", *[f"n{i}" for i in range(s)],
             F.element_at("arr", (pick + 1).cast("int")).alias(f"n{s}"))
-    from ..functions.layout import finalize_release
-
     # materialize the COMPACT per-walk frame (|V| rows × L+1 columns,
     # one row per walk) and release the adjacency cache; the row-per-
     # step view is a lazy narrow posexplode over it — 5× fewer

@@ -53,7 +53,6 @@ def write_partitioned(
     path: str,
     partition_cols: list[str] | None = None,
     replicate_truncate: bool = False,
-    fmt: str = "parquet",
 ) -> None:
     """S4+S5+S6: (dynamically) overwritten, Hive-partitioned columnar sink.
 
@@ -63,7 +62,7 @@ def write_partitioned(
     drops everything first (reference `build_load_dag.py:82` semantics).
     """
     partition_cols = partition_cols if partition_cols is not None else ["block_date"]
-    w = df.write.mode("overwrite").format(fmt)
+    w = df.write.mode("overwrite").format("parquet")
     if replicate_truncate:
         w = w.option("partitionOverwriteMode", "static")
     if partition_cols:

@@ -31,6 +31,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..functions.layout import ensure_parallelism
+
 __all__ = ["MEDIA_SCHEMA", "FEATURE_SCHEMA", "FRAME_SCHEMA",
            "AUDIO_SCHEMA", "VIDEO_FRAME_SCHEMA", "attach_binary_payload",
            "read_media_dir", "decode_stub", "extract_features",
@@ -329,8 +331,7 @@ VIDEO_FRAME_SCHEMA = T.StructType([
 ])
 
 
-def sample_y4m_frames(media: DataFrame, target: int = 4,
-                      batch_hint: int | None = None) -> DataFrame:
+def sample_y4m_frames(media: DataFrame, target: int = 4) -> DataFrame:
     """REAL frame sampling for Y4M video payloads: decode the container
     (:func:`_decode_y4m`), pick ``target`` evenly-strided frames per
     clip (every ``ceil(n_frames/target)``-th, frame 0 always included
@@ -362,12 +363,7 @@ def sample_y4m_frames(media: DataFrame, target: int = 4,
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               VIDEO_FRAME_SCHEMA.fields])
 
-    from ..functions.layout import ensure_parallelism
-    flat = media.select("doc_id", "payload")
-    if batch_hint:
-        flat = flat.repartition(batch_hint)
-    else:
-        flat = ensure_parallelism(flat)
+    flat = ensure_parallelism(media.select("doc_id", "payload"))
     return flat.mapInPandas(run, schema=VIDEO_FRAME_SCHEMA)
 
 
@@ -385,8 +381,7 @@ AUDIO_SCHEMA = T.StructType([
 ])
 
 
-def extract_audio_features(media: DataFrame,
-                           batch_hint: int | None = None) -> DataFrame:
+def extract_audio_features(media: DataFrame) -> DataFrame:
     """Arrow-batched PCM stats over WAV payloads via ``mapInPandas`` —
     the audio decode stage, same shape as :func:`extract_features`:
     duration from the header, peak = max(|sample|) over the whole
@@ -424,12 +419,7 @@ def extract_audio_features(media: DataFrame,
                                columns=[f.name for f in
                                         AUDIO_SCHEMA.fields])
 
-    flat = media.select("doc_id", "payload")
-    if batch_hint:
-        flat = flat.repartition(batch_hint)
-    else:
-        from ..functions.layout import ensure_parallelism
-        flat = ensure_parallelism(flat)
+    flat = ensure_parallelism(media.select("doc_id", "payload"))
     return flat.mapInPandas(run, schema=AUDIO_SCHEMA)
 
 
@@ -532,8 +522,7 @@ FEATURE_SCHEMA_MARKED = T.StructType(
     FEATURE_SCHEMA.fields + [T.StructField("error", T.StringType())])
 
 
-def extract_features(media: DataFrame, batch_hint: int | None = None,
-                     on_error: str = "fail") -> DataFrame:
+def extract_features(media: DataFrame, on_error: str = "fail") -> DataFrame:
     """Arrow-batched feature extraction over the payload column via
     ``mapInPandas`` — the decode stage shape for any modality: one Python
     round-trip per Arrow batch, output schema fixed by FEATURE_SCHEMA.
@@ -579,17 +568,12 @@ def extract_features(media: DataFrame, batch_hint: int | None = None,
             yield pd.DataFrame(feats, columns=[f.name for f in
                                                schema.fields])
 
-    flat = media.select("doc_id", "payload", F.col("meta.mime").alias("mime"))
-    if batch_hint:
-        flat = flat.repartition(batch_hint)
-    else:
-        from ..functions.layout import ensure_parallelism
-        flat = ensure_parallelism(flat)
+    flat = ensure_parallelism(media.select(
+        "doc_id", "payload", F.col("meta.mime").alias("mime")))
     return flat.mapInPandas(run, schema=schema)
 
 
-def extract_features_arrow(media: DataFrame,
-                           batch_hint: int | None = None) -> DataFrame:
+def extract_features_arrow(media: DataFrame) -> DataFrame:
     """:func:`extract_features` on Spark 4's ``mapInArrow`` — the
     Arrow-NATIVE decode stage: each batch arrives as a
     ``pyarrow.RecordBatch`` and results go back as one, skipping the
@@ -619,12 +603,8 @@ def extract_features_arrow(media: DataFrame,
                           type=pa.int64())],
                 names=names)
 
-    flat = media.select("doc_id", "payload", F.col("meta.mime").alias("mime"))
-    if batch_hint:
-        flat = flat.repartition(batch_hint)
-    else:
-        from ..functions.layout import ensure_parallelism
-        flat = ensure_parallelism(flat)
+    flat = ensure_parallelism(media.select(
+        "doc_id", "payload", F.col("meta.mime").alias("mime")))
     return flat.mapInArrow(run, schema=FEATURE_SCHEMA)
 
 
@@ -669,6 +649,5 @@ def sample_frames(media: DataFrame, target: int = 4,
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               FRAME_SCHEMA.fields])
 
-    from ..functions.layout import ensure_parallelism
     flat = ensure_parallelism(media.select("doc_id", "payload"))
     return flat.mapInPandas(run, schema=FRAME_SCHEMA)

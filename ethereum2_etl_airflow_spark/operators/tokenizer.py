@@ -202,13 +202,12 @@ def _safe_merge_batch(rows, full: bool, cap: int,
 
 
 def bpe_train(docs: DataFrame, n_merges: int = 20,
-              text_col: str = "text", batch: int = 12,
-              checkpoint_every: int = 4) -> list[tuple[str, str]]:
+              text_col: str = "text",
+              batch: int = 12) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns the
     rank-ordered merge list [(a, b), ...] — BIT-IDENTICAL to the
-    sequential textbook trainer for any ``batch`` /
-    ``checkpoint_every`` (property-tested against a pure-Python
-    reference).
+    sequential textbook trainer for any ``batch`` (property-tested
+    against a pure-Python reference).
 
     Each round is one combining pair-count aggregate, ONE bounded
     collect of the top-``3·batch`` pairs (TakeOrderedAndProject), and
@@ -230,10 +229,9 @@ def bpe_train(docs: DataFrame, n_merges: int = 20,
     vocab table's own plan stats — a 31-row vocab does not pay
     64-partition shuffles × rounds, a 100 TB-corpus vocab keeps the
     session width — and (b) cuts lineage with ``localCheckpoint``
-    every ``checkpoint_every`` rounds instead of every round (between
-    cuts a round is ONE job; lineage stays bounded at
-    ``checkpoint_every`` narrow rewrites).  Measured at sf0.1: 3.8 s →
-    2.2-2.4 s for the 12-merge check.  Driver state stays bounded:
+    every 4 rounds instead of every round (between cuts a round is ONE
+    job; lineage stays bounded at 4 narrow rewrites).  Measured at
+    sf0.1: 3.8 s → 2.2-2.4 s for the 12-merge check.  Driver state stays bounded:
     ``batch`` rows per round.  Stops early when no pair repeats."""
     from ..functions.layout import pinned_shuffle, plan_width
     from .graph import _release_round_blocks
@@ -270,7 +268,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 20,
             pending += 1
             # cut lineage only when another round will actually read
             # syms — a cut after the final merge would be a wasted job
-            if pending >= checkpoint_every and len(merges) < n_merges:
+            if pending >= 4 and len(merges) < n_merges:
                 syms = syms.localCheckpoint(eager=True)
                 pending = 0
                 # free the previous cut's checkpoint blocks (see

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["CHECKS", "render_check", "run_check", "run_all_checks"]
+__all__ = ["CHECKS", "render_check", "run_check"]
 
 
 def _guard(cond_sql: str, table: str, where: str, message: str,
@@ -54,10 +54,8 @@ def _guard(cond_sql: str, table: str, where: str, message: str,
     return f"SELECT IF({cond_sql}, 1, {err}) AS ok FROM {table} WHERE {where}"
 
 
-def _checks(table_prefix: str, ds: str, ansi_cast: bool) -> dict[str, str]:
-    b = f"{table_prefix}beacon_blocks"
-    c = f"{table_prefix}beacon_committees"
-    v = f"{table_prefix}beacon_validators"
+def _checks(ds: str, ansi_cast: bool) -> dict[str, str]:
+    b, c, v = "beacon_blocks", "beacon_committees", "beacon_validators"
     upto = f"block_date <= DATE'{ds}'"
     return {
         # gapless slots cumulative to ds (blocks_count.sql:1-11)
@@ -91,24 +89,17 @@ def _checks(table_prefix: str, ds: str, ansi_cast: bool) -> dict[str, str]:
 CHECKS = ("blocks_count", "blocks_have_latest", "committees_count", "validators_count")
 
 
-def render_check(name: str, ds: str, table_prefix: str = "",
-                 ansi_cast: bool = False) -> str:
+def render_check(name: str, ds: str, ansi_cast: bool = False) -> str:
     """Render one check's SQL for execution date ``ds`` (Airflow ``{{ds}}``
     templating, `build_load_dag.py:113-120`, done as plain parameters)."""
-    return _checks(table_prefix, ds, ansi_cast)[name]
+    return _checks(ds, ansi_cast)[name]
 
 
 def run_check(spark: SparkSession, name: str, ds: str,
-              table_prefix: str = "", ansi_cast: bool = False) -> DataFrame:
+              ansi_cast: bool = False) -> DataFrame:
     """Execute one verify query; raises on violated invariant (the Spark
     analog of a failed BigQuery job failing the Airflow task)."""
-    df = spark.sql(render_check(name, ds, table_prefix, ansi_cast))
+    df = spark.sql(render_check(name, ds, ansi_cast))
     df.collect()  # force evaluation so the raise_error fires here
     return df
 
-
-def run_all_checks(spark: SparkSession, ds: str, table_prefix: str = "") -> None:
-    """Daily-load verify chain (`build_load_dag.py:126-132`) + the
-    validators check the DAGs leave unwired."""
-    for name in CHECKS:
-        run_check(spark, name, ds, table_prefix)

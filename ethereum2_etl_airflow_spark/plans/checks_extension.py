@@ -20,6 +20,7 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as X
 from ..sources.testdata import load_table
+from ..streaming import run_bounded
 
 __all__ = ["EXTENSION_CHECKS"]
 
@@ -677,7 +678,6 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.testdata import ensure_runtime_conf
-    from ..streaming import run_bounded
     from ..streaming.hourly import hourly_counts_stream
 
     ensure_runtime_conf(spark)
@@ -780,7 +780,6 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes sessions via event-time timeouts.  Deterministic file order ⇒
     deterministic closed-session set (validated against the batch
     semantics in tests)."""
-    from ..streaming import run_bounded
     from ..streaming.sessionize import sessionize_stream
 
     src = ensure_sessionize_source(spark, sf_dir)
@@ -806,7 +805,6 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
-    from ..streaming import run_bounded
     from ..streaming.dedup import dedup_stream
 
     src = os.path.join(
@@ -1135,7 +1133,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.testdata import ensure_runtime_conf
-    from ..streaming.join import attribution_join, run_append_available_now
+    from ..streaming.join import attribution_join
 
     ensure_runtime_conf(spark)
     src_dir = os.path.join(
@@ -1157,7 +1155,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that produced it; the no-data flush batch would pay a planning +
     # commit + state-store lifecycle round to emit nothing (round-12,
     # guide §1.2 — the streaming family's fixed cost)
-    return (run_append_available_now(joined, spark, flush=False)
+    return (run_bounded(joined, spark, prefix="ssj", flush=False)
             .orderBy("user_id", "click_id", "purchase_id"))
 
 
@@ -1214,15 +1212,15 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-extended state — one data batch + one flush batch instead of
     per-file batches × state-store commit cycles (measured ~2 s
     saved; results identical)."""
-    from ..streaming.join import (attribution_join_outer,
-                                  run_append_available_now)
+    from ..streaming.join import attribution_join
 
     src = ensure_stream_join_outer_source(spark, sf_dir)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    out = run_append_available_now(attribution_join_outer(
+    out = run_bounded(attribution_join(
         stream.where(F.col("event_type") == "click"),
-        stream.where(F.col("event_type") == "purchase")), spark)
+        stream.where(F.col("event_type") == "purchase"),
+        how="leftOuter"), spark, prefix="ssj")
     return (out.where(F.col("user_id") >= 0)   # drop the sentinel pair
             .orderBy("user_id", "click_id", "purchase_id"))
 
@@ -1427,7 +1425,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.testdata import ensure_runtime_conf, load_table
     from ..streaming.enrich import enrich_with_dim
-    from ..streaming.join import run_append_available_now
 
     ensure_runtime_conf(spark)
     src_dir = os.path.join(
@@ -1447,7 +1444,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.select("event_id", "user_id", "event_type",
                       F.col("ts").cast("timestamp").alias("ts")),
         dim, "user_id", "c_custkey", ["c_mktsegment", "c_nationkey"])
-    out = run_append_available_now(enriched, spark)
+    out = run_bounded(enriched, spark, prefix="ssj")
     return (out.select("event_id", "user_id", "event_type",
                        F.col("ts").cast("timestamp_ntz").alias("ts"),
                        "c_mktsegment", "c_nationkey")
@@ -2175,16 +2172,15 @@ def q_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows), so the emitted set equals the batch full join.  Single data
     batch + availableNow flush batch, no per-file throttle — see
     q_stream_join_outer."""
-    from ..streaming.join import (attribution_join,
-                                  run_append_available_now)
+    from ..streaming.join import attribution_join
 
     src = ensure_stream_join_outer_source(spark, sf_dir)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    out = run_append_available_now(attribution_join(
+    out = run_bounded(attribution_join(
         stream.where(F.col("event_type") == "click"),
         stream.where(F.col("event_type") == "purchase"),
-        how="fullOuter"), spark)
+        how="fullOuter"), spark, prefix="ssj")
     return (out.where(F.coalesce("user_id", F.lit(0)) >= 0)
             .orderBy("user_id", "click_id", "purchase_id"))
 
@@ -3080,14 +3076,6 @@ def _file_stream(spark: SparkSession, sf_dir: str, table: str,
     return out
 
 
-def _run_complete(df, spark: SparkSession):
-    """Run a complete-mode streaming aggregation to completion over
-    available input (memory sink) and return the final table."""
-    from ..streaming import run_bounded
-
-    return run_bounded(df, spark, mode="complete", prefix="cm")
-
-
 def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CMS counters maintained BY THE STREAM ENGINE: documents
     arrive as a file stream, the (row, bucket) counts are a stateful
@@ -3100,7 +3088,8 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quality import cms_build
 
     stream = _file_stream(spark, sf_dir, "documents", "cmsstream")
-    return (_run_complete(cms_build(stream), spark)
+    return (run_bounded(cms_build(stream), spark, mode="complete",
+                        prefix="cm")
             .orderBy("row", "bucket"))
 
 
@@ -3268,7 +3257,8 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _file_stream(spark, sf_dir, "events", "hllstream",
                           nanos=True, spread=False)
     regs = hll_portable_registers(stream.select("user_id"), "user_id")
-    return _run_complete(regs, spark).orderBy("j")
+    return (run_bounded(regs, spark, mode="complete", prefix="cm")
+            .orderBy("j"))
 
 
 ORACLE_STREAM_HLL = """
@@ -3939,7 +3929,8 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = mdq_bucket_registers(stream.select("event_id", "value"),
                                 "value", n_buckets=64,
                                 id_col="event_id")
-    return _run_complete(regs, spark).orderBy("bucket")
+    return (run_bounded(regs, spark, mode="complete", prefix="cm")
+            .orderBy("bucket"))
 
 
 ORACLE_STREAM_QUANTILE = """

@@ -10,7 +10,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-__all__ = ["run_bounded", "state_partitions"]
+__all__ = ["run_bounded"]
 
 #: stateful-operator partition count for bounded check/demo streams.
 #: Measured at sf0.1 (round 6): 4 beats 8 by ~0.5 s/check on the
@@ -20,48 +20,13 @@ __all__ = ["run_bounded", "state_partitions"]
 #: cardinality — this constant only governs bounded check/demo runs.
 STATE_PARTITIONS = 4
 
-#: measured keys-per-partition sweet spot (round-9 state-partition
-#: sweep, docs/SCALE.md): at 96 k active keys the wall fell ~linearly
-#: with partitions up to 32 (188.9/113.3/63.1/46.8 s at 4/8/16/32),
-#: i.e. ~3 k live keys per state partition balances Arrow-batched
-#: per-event work against per-partition store open/commit/fsync
-#: lifecycles; below that the lifecycles dominate (round 6: 4 beat 8
-#: on sf0.1's few-thousand-key checks).
-_KEYS_PER_STATE_PARTITION = 3_000
-
-
-def state_partitions(n_keys: int | None,
-                     spark: SparkSession | None = None) -> int:
-    """Auto-size the stateful-operator partition count from the
-    ESTIMATED live-key cardinality — the measured deployment rule of
-    the round-9 state-partition sweep (docs/SCALE.md), in code instead
-    of prose: ``ceil(n_keys / 3000)`` clamped to [``STATE_PARTITIONS``
-    (=4), the session's executor parallelism].
-
-    ``n_keys`` is the caller's estimate of concurrently-live state
-    keys (active sessions, distinct fingerprints inside the watermark
-    horizon, CMS/HLL group count); ``None``/0 → the small-stream floor.
-    The count is captured into the checkpoint at stream START and must
-    not change across restarts — size it from the PLANNED key volume,
-    not the first micro-batch."""
-    cap = 4
-    if spark is not None:
-        cap = max(4, spark.sparkContext.defaultParallelism)
-    if not n_keys or n_keys <= 0:
-        return STATE_PARTITIONS
-    return max(STATE_PARTITIONS,
-               min(cap, -(-int(n_keys) // _KEYS_PER_STATE_PARTITION)))
-
-
 #: serializes :func:`run_bounded`'s pinned ``start()`` calls, so each
 #: stream captures its own conf even when several start at once
 _start_lock = threading.Lock()
 
 
 def run_bounded(df, spark: SparkSession, mode: str = "append",
-                n: int | None = None, prefix: str = "st",
-                est_keys: int | None = None,
-                flush: bool = True):
+                prefix: str = "st", flush: bool = True):
     """Run a streaming DataFrame to completion over available input
     (``availableNow`` + memory sink) and return the result as a batch
     DataFrame — the shared harness behind every bounded check/demo
@@ -72,12 +37,12 @@ def run_bounded(df, spark: SparkSession, mode: str = "append",
     partition count, and every stateful stage costs one state-store
     open/commit/fsync per partition per micro-batch, so the session
     default (2×cores) pays dozens of store lifecycles per batch for
-    check streams of a few thousand rows.  Pass ``n`` to pin an
-    explicit count, or ``est_keys`` (estimated live-key cardinality)
-    to auto-size via :func:`state_partitions`; neither → the
-    small-stream floor.  A REAL deployment sizes this to live key
-    cardinality and never restarts with a different value; these runs
-    use a fresh checkpoint every time, so any count is valid.
+    check streams of a few thousand rows.  Every run therefore starts
+    at the constant :data:`STATE_PARTITIONS` (4).  A REAL deployment
+    sizes this to live key cardinality (docs/SCALE.md's state-partition
+    sweep: ~3 k live keys per partition at 96 k keys) and never
+    restarts with a different value; these runs use a fresh
+    checkpoint every time, so any count is valid.
 
     The checkpoint is placed on tmpfs (``/dev/shm``) when present and
     removed after the run: a bounded availableNow run pays offset-log,
@@ -107,9 +72,7 @@ def run_bounded(df, spark: SparkSession, mode: str = "append",
     and the session conf is restored before the run is awaited."""
     from ..functions.layout import pinned_conf
 
-    if n is None:
-        n = state_partitions(est_keys, spark)
-    conf = {"spark.sql.shuffle.partitions": n}
+    conf = {"spark.sql.shuffle.partitions": STATE_PARTITIONS}
     if not flush:
         conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"

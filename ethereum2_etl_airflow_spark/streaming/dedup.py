@@ -21,12 +21,11 @@ on, so no skew by construction.
 
 from __future__ import annotations
 
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..operators.text import fingerprint
 
-__all__ = ["dedup_stream", "run_dedup_available_now"]
+__all__ = ["dedup_stream"]
 
 
 def dedup_stream(docs: DataFrame, ts_col: str = "ts",
@@ -38,19 +37,3 @@ def dedup_stream(docs: DataFrame, ts_col: str = "ts",
     with_fp = (docs.withColumn("fp", fingerprint(text_col))
                .withWatermark(ts_col, watermark))
     return with_fp.dropDuplicatesWithinWatermark(["fp"])
-
-
-def run_dedup_available_now(stream_df: DataFrame,
-                            spark: SparkSession,
-                            est_keys: int | None = None) -> DataFrame:
-    """Run the dedup stream to completion over currently-available input
-    (append sink — each surviving row is emitted exactly once).
-    Delegates to the shared bounded harness (tmpfs throwaway
-    checkpoint, see :func:`..streaming.run_bounded`); pass ``est_keys``
-    (expected distinct fingerprints inside the watermark horizon) to
-    auto-size the state partitions via
-    :func:`..streaming.state_partitions`."""
-    from . import run_bounded
-
-    return run_bounded(stream_df, spark, mode="append", prefix="dedup",
-                       est_keys=est_keys)

@@ -15,11 +15,9 @@ one logical join, two execution modes.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-__all__ = ["attribution_join", "attribution_join_outer",
-           "run_append_available_now"]
+__all__ = ["attribution_join"]
 
 
 def attribution_join(clicks: DataFrame, purchases: DataFrame,
@@ -71,32 +69,3 @@ def attribution_join(clicks: DataFrame, purchases: DataFrame,
                     F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
                     F.col("purchase_ts").cast("timestamp_ntz")
                     .alias("purchase_ts")))
-
-
-def attribution_join_outer(clicks: DataFrame, purchases: DataFrame,
-                           within: str = "1 hour",
-                           watermark: str = "2 hours") -> DataFrame:
-    """Left-outer attribution: every click emits — matched within the
-    window, or null-extended once the watermark proves no match can
-    arrive.  See :func:`attribution_join` for the emission contract."""
-    return attribution_join(clicks, purchases, within=within,
-                            watermark=watermark, how="leftOuter")
-
-
-def run_append_available_now(stream_df: DataFrame,
-                             spark: SparkSession,
-                             est_keys: int | None = None,
-                             flush: bool = True) -> DataFrame:
-    """Run an append-mode streaming query to completion over available
-    input (memory sink) and return the result as a batch DataFrame.
-    Delegates to the shared bounded harness (tmpfs throwaway
-    checkpoint, see :func:`..streaming.run_bounded`); ``est_keys``
-    (expected live join-state keys) auto-sizes the state partitions
-    via :func:`..streaming.state_partitions`; ``flush=False`` skips
-    the final no-data micro-batch — valid ONLY for emission-on-arrival
-    append queries (inner joins; see ``run_bounded``), never for
-    outer joins whose null rows the watermark releases."""
-    from . import run_bounded
-
-    return run_bounded(stream_df, spark, mode="append", prefix="ssj",
-                       est_keys=est_keys, flush=flush)

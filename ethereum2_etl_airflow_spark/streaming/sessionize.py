@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-__all__ = ["sessionize_stream", "sessionize_batch",
-           "sessionize_stream_tws", "SESSION_SCHEMA"]
+__all__ = ["sessionize_stream", "sessionize_batch", "SESSION_SCHEMA"]
 
 SESSION_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -171,109 +170,3 @@ def sessionize_batch(events: DataFrame, gap_s: int = 1800) -> DataFrame:
                  F.count("*").alias("n_events"),
                  F.sum("millis").alias("value_millis"))
             .drop("session_id"))
-
-
-# --- Spark 4 native stateful API (transformWithStateInPandas) -------------
-# Same session semantics as _session_fn, re-expressed on the
-# StatefulProcessor API (ValueState + event-time timers) — the successor
-# to applyInPandasWithState.  ENVIRONMENT GATE: the TWS Python runner
-# needs google.protobuf, which this container lacks; import/use where it
-# exists (the pytest is skip-marked on `import google.protobuf`).  Also
-# requires the RocksDB state store provider:
-#   spark.sql.streaming.stateStore.providerClass =
-#     ...state.RocksDBStateStoreProvider
-
-
-def _tws_processor(gap_s: int):
-    import numpy as np
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    gap_us = gap_s * 1_000_000
-
-    class SessionProc(StatefulProcessor):
-        """One open session per key in a ValueState; an event-time timer
-        at (last_event + gap) past-watermark closes and emits it."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.sess = handle.getValueState(
-                "sess", "start timestamp, last timestamp, n bigint, "
-                        "millis bigint")
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            pdf = pd.concat(list(rows)).sort_values("ts")
-            ts = pdf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-            mv = pdf["millis"].to_numpy().astype(np.int64)
-            new = np.empty(len(ts), dtype=bool)
-            new[0] = True
-            np.greater(ts[1:] - ts[:-1], gap_us, out=new[1:])
-            bounds = np.flatnonzero(new)
-            seg_start = ts[bounds]
-            seg_end = ts[np.append(bounds[1:] - 1, len(ts) - 1)]
-            seg_n = np.append(np.diff(bounds), len(ts) - bounds[-1])
-            seg_millis = np.add.reduceat(mv, bounds)
-            if self.sess.exists():
-                start, last, n, millis = self.sess.get()
-                last_us = np.datetime64(last, "us").astype(np.int64)
-                start_us = np.datetime64(start, "us").astype(np.int64)
-                if ts[0] - last_us <= gap_us:
-                    seg_start[0] = start_us
-                    seg_n[0] += n
-                    seg_millis[0] += millis
-                else:
-                    seg_start = np.insert(seg_start, 0, start_us)
-                    seg_end = np.insert(seg_end, 0, last_us)
-                    seg_n = np.insert(seg_n, 0, n)
-                    seg_millis = np.insert(seg_millis, 0, millis)
-
-            def dt(us):
-                return pd.Timestamp(int(us), unit="us").to_pydatetime()
-
-            k = len(seg_start)
-            self.sess.update((dt(seg_start[k - 1]), dt(seg_end[k - 1]),
-                              int(seg_n[k - 1]), int(seg_millis[k - 1])))
-            # re-arm: one timer per key at open-session close time
-            for t in self.handle.listTimers():
-                self.handle.deleteTimer(t)
-            self.handle.registerTimer(
-                (seg_end[k - 1] + gap_us) // 1000)
-            if k > 1:
-                yield pd.DataFrame({
-                    "user_id": user_id,
-                    "session_start": seg_start[:k - 1].astype("datetime64[us]"),
-                    "session_end": seg_end[:k - 1].astype("datetime64[us]"),
-                    "n_events": seg_n[:k - 1],
-                    "value_millis": seg_millis[:k - 1]})
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            (user_id,) = key
-            if self.sess.exists():
-                start, last, n, millis = self.sess.get()
-                self.sess.clear()
-                yield pd.DataFrame([{
-                    "user_id": user_id, "session_start": start,
-                    "session_end": last, "n_events": n,
-                    "value_millis": millis}])
-
-        def close(self) -> None:
-            pass
-
-    return SessionProc()
-
-
-def sessionize_stream_tws(events: DataFrame, gap_s: int = 1800,
-                          watermark: str = "2 hours") -> DataFrame:
-    """Streaming sessionization on the Spark 4 ``StatefulProcessor``
-    API.  Semantics identical to :func:`sessionize_stream`; see the
-    environment gate note above."""
-    prepared = (events
-                .withColumn("millis",
-                            F.floor(F.col("value") * 1000).cast("long"))
-                .withColumn("ts", F.col("ts").cast("timestamp"))
-                .withWatermark("ts", watermark)
-                .groupBy("user_id"))
-    return prepared.transformWithStateInPandas(
-        _tws_processor(gap_s), outputStructType=SESSION_SCHEMA,
-        outputMode="Append", timeMode="EventTime")

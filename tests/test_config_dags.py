@@ -482,6 +482,45 @@ def test_daily_blocks_committees_loads_read_only_ds(stub_airflow, spark,
         assert counts == {"2024-01-01": per_day, "2024-01-02": per_day}
 
 
+def test_hourly_blocks_load_reads_only_ds(stub_airflow, spark, tmp_path):
+    """An hourly blocks load reads every hour of ds's staged partition
+    and nothing else: loading a newer ds adds its warehouse partition
+    and leaves an older date's files as they were (same names, same
+    mtimes)."""
+    from ethereum2_etl_airflow_spark.dags import build_load_dag
+    from ethereum2_etl_airflow_spark.sources.fixtures import gen_beacon_blocks
+    from ethereum2_etl_airflow_spark.sources.ndjson import stage_export
+
+    staging, warehouse = str(tmp_path / "stage"), str(tmp_path / "wh")
+    # 288 slots x 300 s is one day, 12 slots per staged hour
+    stage_export(gen_beacon_blocks(spark, 2 * 288, genesis=1704067200,
+                                   secs_per_slot=300),
+                 staging, "beacon_blocks", "block_timestamp", hourly=True)
+
+    cfg = read_load_config({"eth2_mainnet_output_bucket": "gs://bkt"})
+    dag = build_load_dag(cfg, spark_factory=lambda: spark,
+                         staging_root=staging, warehouse_root=warehouse,
+                         hourly=True)
+    load = next(t for t in dag.tasks
+                if t.task_id == "load_beacon_blocks").python_callable
+    table = f"{warehouse}/beacon_blocks"
+    old_dir = os.path.join(table, "block_date=2024-01-01")
+
+    load(ds="2024-01-01")
+    assert [d for d in os.listdir(table) if d.startswith("block_date=")] \
+        == ["block_date=2024-01-01"]
+    old = {f: os.stat(os.path.join(old_dir, f)).st_mtime_ns
+           for f in os.listdir(old_dir)}
+    time.sleep(0.05)
+    load(ds="2024-01-02")
+    assert {f: os.stat(os.path.join(old_dir, f)).st_mtime_ns
+            for f in os.listdir(old_dir)} == old
+    counts = {r["block_date"].isoformat(): r["count"] for r in
+              spark.read.parquet(table).groupBy("block_date").count()
+              .collect()}
+    assert counts == {"2024-01-01": 288, "2024-01-02": 288}
+
+
 def test_hourly_export_dag_four_task_surface(stub_airflow):
     """O3: the hourly export DAG carries the reference's 4-task surface,
     including the distinct point-in-time validators snapshot

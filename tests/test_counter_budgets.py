@@ -20,6 +20,15 @@ BUDGETS = {
     "stream_hourly": (5, 6),
     "stream_join_outer": (6, 8),
     "dedup_stream": (5, 6),
+    "pagerank": (6, 13),
+    "kcore": (10, 10),
+    "random_walks": (15, 15),
+    "dedup_clusters_star": (18, 34),
+    "stream_join": (5, 7),
+    "stream_join_full": (6, 8),
+    "stream_enrich": (7, 7),
+    "stream_cms": (5, 7),
+    "mm_features": (5, 5),
 }
 
 

@@ -294,6 +294,45 @@ def test_kmeans_null_embedding_rows_dropped_not_crash(spark):
     assert 2 not in {r["vec_id"] for r in samp} and samp
 
 
+def test_kmeans_null_element_matches_oracle(spark):
+    """A NULL element inside an embedding follows the SQL oracle: its
+    distance terms are skipped, it adds 0 to its cell's sum and counts
+    in the member count.  Two vectors carry one: the first md5 seed
+    (so a centroid starts with a NULL) and one other vector.  The fit
+    kernel's integer cast runs with numpy's invalid flag raised in the
+    workers; driver-side RuntimeWarnings are errors here."""
+    import hashlib
+    import random
+    import warnings
+
+    import duckdb
+    import pyarrow as pa
+
+    from ethereum2_etl_airflow_spark.operators.clustering import kmeans_int
+    from ethereum2_etl_airflow_spark.plans.checks_extension import (
+        _kmeans_oracle_sql)
+
+    dim, rng = 8, random.Random(7)
+    ids = list(range(1, 61))
+    seed = min(ids, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    vecs = [[rng.randint(-8, 8) / 4 for _ in range(dim)] for _ in ids]
+    vecs[ids.index(seed)][3] = None
+    vecs[ids.index(30 if seed != 30 else 31)][5] = None
+    emb = spark.createDataFrame(list(zip(ids, vecs)),
+                                "vec_id long, embedding array<float>")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = sorted(tuple(r) for r in kmeans_int(emb, k=4, n_iter=3)
+                     .select("vec_id", "cluster", "dist2").collect())
+    con = duckdb.connect()
+    con.register("embeddings", pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32()))}))
+    want = sorted(con.execute(
+        _kmeans_oracle_sql(k=4, n_iter=3, dim=dim)).fetchall())
+    assert got == want
+
+
 def test_weighted_sample_fractional_weight_has_no_mass(spark):
     """Round-10 review fix: a fractional weight in (0, 1) truncates to
     0 under the bigint division — it must be EXCLUDED (zero mass), not

@@ -298,9 +298,8 @@ def test_dedup_stream_watermark_horizon(spark, tmp_path):
     import os
     from datetime import datetime, timedelta
 
-    from ethereum2_etl_airflow_spark.streaming.dedup import (
-        dedup_stream, run_dedup_available_now,
-    )
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
+    from ethereum2_etl_airflow_spark.streaming.dedup import dedup_stream
 
     src = str(tmp_path / "docs")
     os.makedirs(src)
@@ -338,8 +337,8 @@ def test_dedup_stream_watermark_horizon(spark, tmp_path):
 
     stream = (spark.readStream.schema(batch1.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    out = run_dedup_available_now(
-        dedup_stream(stream, watermark="1 hour"), spark)
+    out = run_bounded(dedup_stream(stream, watermark="1 hour"), spark,
+                      prefix="dedup")
     rows = out.collect()
     # batch1: one of doc 1/2 survives (same fingerprint) + doc 3;
     # batch2/3: docs 4 and 6 (new fps; wm reaches t0+4h, state evicted);
@@ -356,8 +355,8 @@ def test_attribution_join_stream_equals_batch(spark, tmp_path):
     batch join built from the same logical definition."""
     import os
 
-    from ethereum2_etl_airflow_spark.streaming.join import (
-        attribution_join, run_append_available_now)
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
+    from ethereum2_etl_airflow_spark.streaming.join import attribution_join
 
     rows = [
         # user 1: click at t0, purchases at +30m (match) and +90m (no)
@@ -382,9 +381,10 @@ def test_attribution_join_stream_equals_batch(spark, tmp_path):
     os.makedirs(src, exist_ok=True)
     ev.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(ev.schema).parquet(src)
-    streamed = run_append_available_now(
+    streamed = run_bounded(
         attribution_join(stream.where("event_type='click'"),
-                         stream.where("event_type='purchase'")), spark)
+                         stream.where("event_type='purchase'")), spark,
+        prefix="ssj")
     assert ({(r["click_id"], r["purchase_id"]) for r in streamed.collect()}
             == {(100, 101)})
 
@@ -485,8 +485,8 @@ def test_attribution_outer_withholds_until_watermark(spark, tmp_path):
     import os
     import shutil
 
-    from ethereum2_etl_airflow_spark.streaming.join import (
-        attribution_join_outer, run_append_available_now)
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
+    from ethereum2_etl_airflow_spark.streaming.join import attribution_join
 
     def mk(rows):
         return (spark.createDataFrame(
@@ -516,9 +516,10 @@ def test_attribution_outer_withholds_until_watermark(spark, tmp_path):
             os.utime(dest, (1_700_000_000 + i * 10,) * 2)
         stream = (spark.readStream.schema(real.schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        out = run_append_available_now(attribution_join_outer(
+        out = run_bounded(attribution_join(
             stream.where("event_type='click'"),
-            stream.where("event_type='purchase'")), spark)
+            stream.where("event_type='purchase'"), how="leftOuter"),
+            spark, prefix="ssj")
         return {(r["user_id"], r["click_id"], r["purchase_id"])
                 for r in out.collect()}
 
@@ -540,53 +541,6 @@ def test_enrich_with_dim_left_keeps_unmatched(spark):
            for r in enrich_with_dim(facts, dim, "k", "dk", ["attr"],
                                     how="left").collect()}
     assert out == {1: "a", 2: None}
-
-
-def test_sessionize_tws_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas sessionization (Spark 4 StatefulProcessor
-    API): watermark-closed sessions must agree with the batch semantics.
-    The TWS Python runner needs google.protobuf — skip where absent."""
-    pytest.importorskip("google.protobuf")
-    import os
-    import uuid
-
-    from ethereum2_etl_airflow_spark.streaming.sessionize import (
-        sessionize_batch, sessionize_stream_tws,
-    )
-
-    ev = (load_table(spark, "/root/testdata/sf0.001", "events")
-          .select("user_id", "ts", "value"))
-    src = str(tmp_path / "tws_src")
-    os.makedirs(src)
-    ev.where(F.col("ts") < "2024-01-15").coalesce(1) \
-        .write.mode("append").parquet(src)
-    ev.where(F.col("ts") >= "2024-01-15").coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        schema = spark.read.parquet(src).schema
-        stream_src = (spark.readStream.schema(schema)
-                      .option("maxFilesPerTrigger", 1).parquet(src))
-        sessions = sessionize_stream_tws(stream_src, gap_s=6 * 3600,
-                                         watermark="1 hour")
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        q = (sessions.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-        got = {(r["user_id"], r["session_start"], r["session_end"],
-                r["n_events"], r["value_millis"])
-               for r in spark.table(name).collect()}
-        expected = {(r["user_id"], r["session_start"], r["session_end"],
-                     r["n_events"], r["value_millis"])
-                    for r in sessionize_batch(ev, gap_s=6 * 3600).collect()}
-        assert got, "no sessions closed by the stream"
-        assert got <= expected
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 class _CountingSession:
@@ -713,37 +667,6 @@ def test_pinned_shuffle_state_is_per_session(spark):
     assert other.conf.get(key) == before_b
 
 
-def test_state_partitions_auto_size_tracks_key_volume(spark):
-    """The round-9 state-partition sweep measured (docs/SCALE.md): at
-    96k active keys the wall falls ~linearly with partitions up to 32;
-    at few-thousand-key check streams 4 beats 8.  state_partitions
-    encodes that rule — ~3k live keys per partition, floored at the
-    small-stream 4, capped at the session parallelism — so the auto
-    size must pick the measured sweet spot at both ends and never
-    exceed the box."""
-    from ethereum2_etl_airflow_spark.streaming import (
-        STATE_PARTITIONS, state_partitions)
-
-    par = max(4, spark.sparkContext.defaultParallelism)
-    # no estimate / degenerate estimates -> the small-stream floor
-    assert state_partitions(None, spark) == STATE_PARTITIONS
-    assert state_partitions(0, spark) == STATE_PARTITIONS
-    assert state_partitions(-5, spark) == STATE_PARTITIONS
-    # sf0.1 check streams (couple thousand keys) -> stay at the floor
-    assert state_partitions(2_000, spark) == STATE_PARTITIONS
-    # the measured 64x sweep point: 96k keys -> the measured 32-part
-    # sweet spot (capped by parallelism on smaller boxes)
-    assert state_partitions(96_000, spark) == min(32, par)
-    # intermediate volumes interpolate monotonically
-    widths = [state_partitions(n, spark)
-              for n in (2_000, 12_000, 48_000, 96_000, 10_000_000)]
-    assert widths == sorted(widths)
-    # never exceeds the session's executor parallelism
-    assert state_partitions(10_000_000, spark) <= par
-    # without a session to read parallelism from, stays conservative
-    assert state_partitions(96_000, None) == STATE_PARTITIONS
-
-
 def test_run_bounded_flush_false_matches_and_restores_conf(spark, tmp_path):
     """``flush=False`` (skip the final no-data micro-batch) is valid
     for emission-on-arrival append queries: an inner attribution join
@@ -789,8 +712,11 @@ def test_run_bounded_flush_false_matches_and_restores_conf(spark, tmp_path):
 
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
     spark.conf.set(key, "true")
-    assert run(flush=False) == run(flush=True)
-    assert spark.conf.get(key) == "true"  # restored to the prior value
+    try:
+        assert run(flush=False) == run(flush=True)
+        assert spark.conf.get(key) == "true"  # restored to the prior value
+    finally:
+        spark.conf.unset(key)
 
 
 def test_run_bounded_drops_its_memory_sink(spark, tmp_path):
@@ -830,8 +756,7 @@ def test_run_bounded_concurrent_flush_runs_keep_their_own_conf(spark,
 
     from ethereum2_etl_airflow_spark.functions.layout import parallel_frames
     from ethereum2_etl_airflow_spark.streaming import run_bounded
-    from ethereum2_etl_airflow_spark.streaming.join import (
-        attribution_join, attribution_join_outer)
+    from ethereum2_etl_airflow_spark.streaming.join import attribution_join
 
     # real clicks/purchases, then a sentinel pair 5 h later whose
     # watermark closes over every real click
@@ -864,7 +789,8 @@ def test_run_bounded_concurrent_flush_runs_keep_their_own_conf(spark,
 
     def outer():
         return sorted(map(tuple, run_bounded(
-            attribution_join_outer(*stream()), spark, prefix="cfo")
+            attribution_join(*stream(), how="leftOuter"), spark,
+            prefix="cfo")
             .collect()), key=repr)
 
     def inner():
