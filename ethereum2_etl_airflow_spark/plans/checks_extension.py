@@ -711,7 +711,7 @@ FROM events GROUP BY 1 ORDER BY 1
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessions (30 min) — the batch reference semantics of the
-    applyInPandasWithState streaming operator in streaming/sessionize.py
+    native ``session_window`` streaming operator in streaming/sessionize.py
     (the streaming variant is checked against this in tests)."""
     from ..streaming.sessionize import sessionize_batch
 
@@ -774,12 +774,12 @@ def ensure_sessionize_source(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rows-only: the applyInPandasWithState streaming path itself —
+    """rows-only: the ``session_window`` streaming path itself —
     events split into two event-time-ordered files, processed as two
-    micro-batches (maxFilesPerTrigger=1) so the advancing watermark
-    closes sessions via event-time timeouts.  Deterministic file order ⇒
-    deterministic closed-session set (validated against the batch
-    semantics in tests)."""
+    micro-batches (maxFilesPerTrigger=1) plus the no-data flush batch, so
+    the advancing watermark closes sessions whose last event + gap it
+    has passed.  Deterministic file order ⇒ deterministic closed-session
+    set (equal to the batch sessions that watermark closes, in tests)."""
     from ..streaming.sessionize import sessionize_stream
 
     src = ensure_sessionize_source(spark, sf_dir)
@@ -1266,9 +1266,10 @@ FROM e GROUP BY w_start ORDER BY w_start
 
 
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Built-in ``session_window`` (gap-based, 6 h) per user — the
-    native analog of the custom sessionizer; window.end = last event +
-    gap, which the oracle reproduces from the island grouping."""
+    """Built-in ``session_window`` (gap-based, 6 h) per user — the batch
+    form of the window the streaming sessionizer runs (there at gap +
+    1 µs); window.end = last event + gap, which the oracle reproduces
+    from the island grouping."""
     ev = load_table(spark, sf_dir, "events")
     return (ev.groupBy("user_id",
                        F.session_window(F.col("ts").cast("timestamp"),

@@ -4,7 +4,8 @@ exchange) fails here instead of hiding in wall-time noise.
 
 Budgets are the larger of the counts measured at ``local[4]`` and
 ``local[8]`` at sf0.001.  Tasks and bytes are not pinned: they move with
-the core count."""
+the core count.  ``sessionize_stream`` runs no Python worker: its
+Python bytes are pinned at 0."""
 
 from __future__ import annotations
 
@@ -39,6 +40,8 @@ def test_checks_stay_within_counter_budgets(spark, sf_dir):
     for rec in profile(spark, list(BUDGETS), sf_dir, 1):
         assert "error" not in rec, rec
         jobs, stages = BUDGETS[rec["check"]]
+        if rec["check"] == "sessionize_stream":
+            assert rec["python_bytes"] == 0, rec
         if rec["jobs"] > jobs or rec["stages"] > stages:
             over[rec["check"]] = {"jobs": (rec["jobs"], jobs),
                                   "stages": (rec["stages"], stages)}

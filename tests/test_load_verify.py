@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from ethereum2_etl_airflow_spark.operators.load import (
     compute_meta, derive_block_date, load_table, write_partitioned,
 )
-from ethereum2_etl_airflow_spark.operators.verify import CHECKS, run_check
+from ethereum2_etl_airflow_spark.operators.verify import run_check
 from ethereum2_etl_airflow_spark.sources.fixtures import (
     gen_beacon_blocks, gen_beacon_committees, gen_beacon_validators,
     write_staging_ndjson,

@@ -14,7 +14,7 @@ from ethereum2_etl_airflow_spark.functions.skew import salted_join
 from ethereum2_etl_airflow_spark.operators.load import read_latest_snapshot
 from ethereum2_etl_airflow_spark.sources.fixtures import gen_beacon_blocks
 from ethereum2_etl_airflow_spark.sources.ndjson import (
-    read_ndjson, read_partition, stage_export, staging_path,
+    read_ndjson, read_partition, stage_export,
 )
 from ethereum2_etl_airflow_spark.sources.schemas import beacon_schema
 from ethereum2_etl_airflow_spark.sources.testdata import load_table
@@ -122,14 +122,17 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
 
 
 def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization: sessions closed by the
-    advancing watermark must agree with the batch window semantics."""
+    """Native session-window sessionization: the stream emits exactly the
+    batch sessions the final watermark has closed (session_end + gap
+    before it)."""
     import os
 
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
     from ethereum2_etl_airflow_spark.streaming.sessionize import (
-        SESSION_SCHEMA, sessionize_batch, sessionize_stream,
+        sessionize_batch, sessionize_stream,
     )
 
+    gap_us = 6 * 3600 * 1_000_000
     ev = (load_table(spark, "/root/testdata/sf0.001", "events")
           .select("user_id", "ts", "value"))
     src = str(tmp_path / "sess_src")
@@ -146,76 +149,60 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
                   .option("maxFilesPerTrigger", 1).parquet(src))
     sessions = sessionize_stream(stream_src, gap_s=6 * 3600,
                                  watermark="1 hour")
-    import uuid
+    got = {tuple(r) for r in run_bounded(sessions, spark, prefix="sess")
+           .collect()}
 
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (sessions.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {(r["user_id"], r["session_start"], r["session_end"],
-            r["n_events"], r["value_millis"])
-           for r in spark.table(name).collect()}
-
-    expected = {(r["user_id"], r["session_start"], r["session_end"],
-                 r["n_events"], r["value_millis"])
-                for r in sessionize_batch(ev, gap_s=6 * 3600).collect()}
-    # the stream emits only watermark-closed sessions — a nonempty subset
-    assert got, "no sessions closed by the stream"
-    assert got <= expected, "stream emitted a session batch disagrees with"
+    # the watermark tracks the max event time in milliseconds
+    max_us = ev.select(F.unix_micros(F.max(F.col("ts").cast("timestamp")))) \
+        .first()[0]
+    watermark_us = max_us // 1000 * 1000 - 3600 * 1_000_000
+    closed = sessionize_batch(ev, gap_s=6 * 3600).where(
+        F.unix_micros(F.col("session_end").cast("timestamp")) + gap_us
+        < watermark_us)
+    expected = {tuple(r) for r in closed.collect()}
+    assert len(expected) == 578
+    assert got == expected
 
 
-def test_session_fn_multi_chunk_unordered_input():
-    """The per-group kernel sorts with a numpy argsort over just the
-    (ts, millis) columns (round-11): multiple out-of-order Arrow chunks
-    must produce the same sessions as one pre-sorted frame."""
+def test_sessionize_stream_closes_on_event_time(spark, tmp_path):
+    """A session stays open through batches where its user has no data:
+    user 1's 00:00 session takes its 04:00 event two batches later, and
+    closes only when the watermark passes 04:00 + gap."""
     import datetime
+    import os
+    import time
 
-    import pandas as pd
+    from ethereum2_etl_airflow_spark.streaming import run_bounded
+    from ethereum2_etl_airflow_spark.streaming.sessionize import (
+        sessionize_stream,
+    )
 
-    from ethereum2_etl_airflow_spark.streaming.sessionize import _session_fn
+    day = datetime.datetime(2024, 1, 1)
+    src = tmp_path / "src"
+    src.mkdir()
+    now = time.time()
+    # one file per micro-batch: (user_id, hour of its one event)
+    for i, (user, hour) in enumerate([(1, 0), (2, 3), (1, 4), (3, 36)]):
+        out = str(tmp_path / f"f{i}")
+        spark.createDataFrame(
+            [(user, day + datetime.timedelta(hours=hour), 1.0)],
+            "user_id long, ts timestamp, value double") \
+            .coalesce(1).write.parquet(out)
+        (part,) = glob.glob(f"{out}/part-*.parquet")
+        dst = str(src / f"{i}.parquet")
+        os.rename(part, dst)
+        # the file source orders files by modification time
+        os.utime(dst, (now - 40 + 10 * i,) * 2)
 
-    class _State:
-        hasTimedOut = False
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
-        def setTimeoutTimestamp(self, ts):
-            pass
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-    def run(chunks):
-        fn = _session_fn(gap_s=3600)
-        st = _State()
-        out = list(fn((7,), iter(chunks), st))
-        return out, st.value
-
-    base = datetime.datetime(2024, 1, 1)
-    rows = [(base + datetime.timedelta(seconds=s), m) for s, m in
-            [(0, 1), (10, 2), (7200, 4), (7300, 8), (20000, 16)]]
-
-    def chunk(idx):
-        return pd.DataFrame({
-            "user_id": 7,
-            "ts": pd.Series([rows[i][0] for i in idx], dtype="datetime64[us]"),
-            "value": 0.0,
-            "millis": [rows[i][1] for i in idx]})
-
-    sorted_out, sorted_state = run([chunk([0, 1, 2, 3, 4])])
-    # same rows split across two chunks, interleaved out of order
-    multi_out, multi_state = run([chunk([4, 1]), chunk([3, 0, 2])])
-
-    assert sorted_state == multi_state
-    a = pd.concat(sorted_out).reset_index(drop=True)
-    b = pd.concat(multi_out).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    # two closed sessions emitted, the open third kept in state
-    assert list(a["n_events"]) == [2, 2]
-    assert list(a["value_millis"]) == [3, 12]
-    assert sorted_state[2:] == (1, 16)
+    stream_src = (spark.readStream
+                  .schema("user_id long, ts timestamp, value double")
+                  .option("maxFilesPerTrigger", 1).parquet(str(src)))
+    out = run_bounded(sessionize_stream(stream_src, gap_s=6 * 3600,
+                                        watermark="1 hour"),
+                      spark, prefix="sess")
+    got = {tuple(r) for r in out.collect()}
+    h = lambda n: day + datetime.timedelta(hours=n)  # noqa: E731
+    assert got == {(1, h(0), h(4), 2, 2000), (2, h(3), h(3), 1, 1000)}
 
 
 def test_asof_join_semantics(spark):
