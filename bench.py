@@ -6,7 +6,7 @@ Runs on ``local[$SPARK_GRAFT_CPUS]`` (default: every core) over the sf
 directory ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data), after
 the registry's fixture bootstrap (``plans.registry.ensure_all``).
 
-Sequential pass: ``tools/profile.py``'s ``profile()`` over the
+Sequential pass: ``tools/measure.py``'s ``profile()`` over the
 ``sort_limit`` control and then every other check in name order.  Each
 check runs once cold and three times warm to the noop sink, with a gc
 and a cache clear before every run, and yields one record: cold wall,
@@ -124,7 +124,7 @@ def main() -> None:
     from ethereum2_etl_airflow_spark.plans.registry import (
         ensure_all, spark_queries)
     from ethereum2_etl_airflow_spark.session import build_session
-    from tools.profile import profile
+    from tools.measure import profile
 
     # FAIR scheduling: under FIFO a long multi-stage job at the head of
     # the queue (streaming micro-batches, iterative k-means) holds every

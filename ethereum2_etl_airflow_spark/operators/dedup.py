@@ -782,7 +782,7 @@ def semantic_dedup(emb: DataFrame, n_cells: int = 8,
     Sizing discipline: ``n_cells ∝ √N`` balances the N·n_cells
     assignment against the N²/n_cells GEMM at N^1.5 total — the FAISS
     IVF rule (the similarity/ANN scale-up table in ``docs/SCALE.md``;
-    ``tools/profile.py ... dedup_semantic`` re-measures it).  The removal
+    ``tools/measure.py ... dedup_semantic`` re-measures it).  The removal
     is one distinct + one left-anti join on the id.
 
     ``refine_iters > 0`` replaces the raw md5-anchor cells with

@@ -19,7 +19,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as X
-from ..sources.testdata import load_table
+from ..sources.testdata import fixture_dir, load_table
 from ..streaming import run_bounded
 
 __all__ = ["EXTENSION_CHECKS"]
@@ -31,6 +31,19 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
+
+
+def _linked_table(sf_dir: str, table: str) -> str:
+    """A directory holding a symlink to one single-file testdata table:
+    streaming file sources read directories, and the read-only testdata
+    stays untouched."""
+    import os
+
+    def build(out):
+        os.makedirs(out)
+        os.symlink(os.path.abspath(os.path.join(sf_dir, f"{table}.parquet")),
+                   os.path.join(out, f"{table}.parquet"))
+    return fixture_dir(sf_dir, f"{table}_link", build)
 
 
 # --- X4: text analysis ----------------------------------------------------
@@ -673,26 +686,11 @@ def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming file source + 1 h tumbling window + watermark,
     run to completion with availableNow — the cron-pair replacement.
     Oracle: the equivalent batch hourly aggregate."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..sources.testdata import ensure_runtime_conf
     from ..streaming.hourly import hourly_counts_stream
 
     ensure_runtime_conf(spark)
-    # the file source needs a directory: expose the single-file table via a
-    # symlink in a stable temp dir (read-only testdata stays untouched)
-    src_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"e2etl_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, "events.parquet")
-    if not os.path.exists(link):
-        try:
-            os.symlink(f"{sf_dir}/events.parquet", link)
-        except FileExistsError:
-            pass  # another bench thread won the check-then-create race
+    src_dir = _linked_table(sf_dir, "events")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = hourly_counts_stream(spark, src_dir, schema, ts_col="ts",
                                   ts_is_nanos=True)
@@ -756,21 +754,14 @@ def ensure_sessionize_source(spark: SparkSession, sf_dir: str) -> str:
     source write + per-user state proportional without changing what the
     check proves.
     """
-    import hashlib
-    import os
-
-    src = os.path.join(
-        "/tmp", f"e2etl_sess_v2_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS2")):
+    def build(src):
         ev = (load_table(spark, sf_dir, "events")
               .where(F.col("user_id") % 5 == 0)
               .select("user_id", "ts", "value"))
-        ev.where(F.col("ts") < "2024-01-15").coalesce(1) \
-            .write.mode("overwrite").parquet(src)
+        ev.where(F.col("ts") < "2024-01-15").coalesce(1).write.parquet(src)
         ev.where(F.col("ts") >= "2024-01-15").coalesce(1) \
             .write.mode("append").parquet(src)
-        open(os.path.join(src, "_SUCCESS2"), "w").close()
-    return src
+    return fixture_dir(sf_dir, "sess", build)
 
 
 def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,6 +785,18 @@ def q_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id", "session_start"))
 
 
+def ensure_dedup_stream_source(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the dedup stream's one-file source (idempotent per
+    sf_dir): the dup corpus with a synthetic event time spread over
+    10 minutes."""
+    return fixture_dir(sf_dir, "ddst", lambda src: (
+        _dup_corpus(spark, sf_dir).select(
+            "doc_id", "text",
+            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id") % 600)
+            .alias("ts"))
+        .coalesce(1).write.parquet(src)))
+
+
 def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup (streaming/dedup.py): the dup corpus
     (documents ∪ perturbed copies) flows through
@@ -802,19 +805,9 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     projects to the fingerprint alone — the surviving *row* among equal-
     content copies is pick-any, the surviving fingerprint SET is exact —
     so the check is oracle-hashable despite the nondeterministic pick."""
-    import hashlib
-    import os
-
     from ..streaming.dedup import dedup_stream
 
-    src = os.path.join(
-        "/tmp", f"e2etl_ddst_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        corpus = _dup_corpus(spark, sf_dir).select(
-            "doc_id", "text",
-            F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id") % 600)
-            .alias("ts"))
-        corpus.coalesce(1).write.mode("overwrite").parquet(src)
+    src = ensure_dedup_stream_source(spark, sf_dir)
     stream_src = (spark.readStream
                   .schema(spark.read.parquet(src).schema).parquet(src))
     surv = dedup_stream(stream_src, ts_col="ts", text_col="text",
@@ -1128,24 +1121,11 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL is a true oracle (with multi-batch input, rows later than an
     advanced watermark could legitimately be dropped; single-batch input
     sidesteps that by construction)."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..sources.testdata import ensure_runtime_conf
     from ..streaming.join import attribution_join
 
     ensure_runtime_conf(spark)
-    src_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"e2etl_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, "events.parquet")
-    if not os.path.exists(link):
-        try:
-            os.symlink(f"{sf_dir}/events.parquet", link)
-        except FileExistsError:
-            pass  # another bench thread won the check-then-create race
+    src_dir = _linked_table(sf_dir, "events")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = spark.readStream.schema(schema).parquet(src_dir)
     joined = attribution_join(
@@ -1179,25 +1159,20 @@ def ensure_stream_join_outer_source(spark: SparkSession, sf_dir: str) -> str:
     closes over every real click — so every unmatched click's null row
     is emitted before availableNow terminates, making the streaming
     result equal the batch left join (the oracle)."""
-    import hashlib
-    import os
     from datetime import timedelta
 
-    src = os.path.join(
-        "/tmp", f"e2etl_ssjo_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS2")):
+    def build(src):
         ev = (load_table(spark, sf_dir, "events")
               .where(F.col("event_type").isin("click", "purchase"))
               .select("event_id", "user_id", "event_type", "ts"))
-        ev.coalesce(1).write.mode("overwrite").parquet(src)
+        ev.coalesce(1).write.parquet(src)
         max_ts = ev.agg(F.max("ts")).collect()[0][0]  # bounded: 1 row
         flush_ts = max_ts + timedelta(hours=4)
         sentinel = spark.createDataFrame(
             [(-10, -1, "click", flush_ts), (-11, -1, "purchase", flush_ts)],
             ev.schema)
         sentinel.coalesce(1).write.mode("append").parquet(src)
-        open(os.path.join(src, "_SUCCESS2"), "w").close()
-    return src
+    return fixture_dir(sf_dir, "ssjo", build)
 
 
 def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1420,24 +1395,11 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     No watermark, no state — every micro-batch is a fresh broadcast
     join, so the streaming result equals the batch join exactly and the
     batch SQL is a strict oracle."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..sources.testdata import ensure_runtime_conf, load_table
+    from ..sources.testdata import ensure_runtime_conf
     from ..streaming.enrich import enrich_with_dim
 
     ensure_runtime_conf(spark)
-    src_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"e2etl_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, "events.parquet")
-    if not os.path.exists(link):
-        try:
-            os.symlink(f"{sf_dir}/events.parquet", link)
-        except FileExistsError:
-            pass
+    src_dir = _linked_table(sf_dir, "events")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = spark.readStream.schema(schema).parquet(src_dir)
     dim = load_table(spark, sf_dir, "customer")
@@ -1878,73 +1840,23 @@ ORDER BY query_id, rank
 EXTENSION_CHECKS["sim_pq"] = (q_sim_pq, ORACLE_SIM_PQ)
 
 
-#: bump when build_pq_index's quantization/layout changes — part of the
-#: cache key below, so a code change can never serve a stale index
-_PQ_BUILDER_VERSION = 1
-#: build parameters baked into the cached index (must mirror the
-#: build_pq_index call below — they are part of the cache key)
+#: build parameters baked into the cached index; with the builder
+#: version they form its fixture tag — bump the ``v1`` when
+#: build_pq_index's quantization or layout changes
 _PQ_BUILD_PARAMS = {"m_sub": 4, "n_anchors": 8, "dim": 64}
+_PQ_TAG = "pq_index_v1_" + "_".join(f"{k}{v}" for k, v
+                                    in sorted(_PQ_BUILD_PARAMS.items()))
 
 
 def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the PQ index for ``sf_dir`` once (idempotent — the
     production cadence: an index is BUILT on corpus change and SERVED
-    many times).  The path is fingerprinted with the embeddings
-    parquet's (mtime, size), the build parameters AND a builder
-    version, so regenerated testdata, a parameter change, or a
-    quantization change all invalidate the cache instead of serving a
-    stale index.  Concurrent-builder safe: the build writes into a
-    pid-unique temp dir and publishes with an atomic rename — a loser
-    of the race discards its copy (the winner's index is bit-identical
-    by construction: the build is deterministic)."""
-    import hashlib
-    import os
-    import shutil
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    params = "|".join(f"{k}={v}" for k, v
-                      in sorted(_PQ_BUILD_PARAMS.items()))
-    key = hashlib.md5(
-        f"{os.path.normpath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|v{_PQ_BUILDER_VERSION}|{params}"
-        .encode()).hexdigest()[:12]
-    path = f"/tmp/spark_graft_pq_index_{key}"
-    marker = os.path.join(path, "codes", "_SUCCESS")
-    if not os.path.exists(marker):
-        # opportunistic GC: crashed builders orphan pid-unique tmp
-        # dirs — reap only those whose pid is no longer alive (a live
-        # concurrent builder's tmp must not be pulled out from under it)
-        base = os.path.dirname(path) or "."
-        prefix = os.path.basename(path) + ".build."
-        for stale in os.listdir(base):
-            if not stale.startswith(prefix):
-                continue
-            try:
-                pid = int(stale[len(prefix):])
-                os.kill(pid, 0)       # raises if the pid is gone
-            except (ValueError, ProcessLookupError):
-                shutil.rmtree(os.path.join(base, stale),
-                              ignore_errors=True)
-            except PermissionError:
-                pass                  # pid alive under another user
-        tmp = f"{path}.build.{os.getpid()}"
-        S.build_pq_index(_emb(spark, sf_dir), tmp, **_PQ_BUILD_PARAMS)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            # OSError is only "another builder won" when the winner's
-            # COMPLETE index is actually there — any other cause
-            # (stale partial dir at `path`, permissions, cross-fs tmp)
-            # must surface, not silently return a broken path
-            if not os.path.exists(marker):
-                raise RuntimeError(
-                    f"PQ index publish failed and no complete index "
-                    f"exists at {path} (expected marker {marker}); "
-                    f"remove any stale partial directory and retry"
-                ) from None
-    return path
+    many times).  The build parameters and a builder version form the
+    fixture tag, so a parameter or quantization change invalidates the
+    cache instead of serving a stale index (regenerated testdata does
+    too: :func:`fixture_dir` keys on it)."""
+    return fixture_dir(sf_dir, _PQ_TAG, lambda out: (
+        S.build_pq_index(_emb(spark, sf_dir), out, **_PQ_BUILD_PARAMS)))
 
 
 def q_sim_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3032,11 +2944,10 @@ EXTENSION_CHECKS["random_walks"] = (q_random_walks, ORACLE_RANDOM_WALKS)
 # --- streaming CMS maintenance (stateful complete-mode aggregation) -------
 
 def _file_stream(spark: SparkSession, sf_dir: str, table: str,
-                 tag: str, nanos: bool = False, spread: bool = True):
-    """readStream over a single driver-testdata parquet table: exposes
-    the file via a symlink in a stable temp dir (streaming file sources
-    need a directory; read-only testdata stays untouched).  Shared by
-    the complete-mode sketch-maintenance checks.
+                 nanos: bool = False, spread: bool = True):
+    """readStream over a single driver-testdata parquet table, through
+    its :func:`_linked_table` directory.  Shared by the complete-mode
+    sketch-maintenance checks.
 
     ``spread``: the fixture is ONE single-row-group parquet file, so
     every micro-batch scans as ONE task and the sketch map work
@@ -3050,20 +2961,7 @@ def _file_stream(spark: SparkSession, sf_dir: str, table: str,
     row groups per batch and gets scan parallelism natively — pass
     ``spread=False`` there (the repartition would be a pure extra
     shuffle of the corpus)."""
-    import hashlib
-    import os
-    import tempfile
-
-    src_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"e2etl_{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-    os.makedirs(src_dir, exist_ok=True)
-    link = os.path.join(src_dir, f"{table}.parquet")
-    if not os.path.exists(link):
-        try:
-            os.symlink(f"{sf_dir}/{table}.parquet", link)
-        except FileExistsError:
-            pass
+    src_dir = _linked_table(sf_dir, table)
     reader = spark.read.option("nanosAsLong", nanos) if nanos \
         else spark.read
     schema = reader.parquet(f"{sf_dir}/{table}.parquet").schema
@@ -3088,7 +2986,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency summary."""
     from ..operators.quality import cms_build
 
-    stream = _file_stream(spark, sf_dir, "documents", "cmsstream")
+    stream = _file_stream(spark, sf_dir, "documents")
     return (run_bounded(cms_build(stream), spark, mode="complete",
                         prefix="cm")
             .orderBy("row", "bucket"))
@@ -3255,7 +3153,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread=False: one md5 per row — the repartition exchange costs
     # more than the map work it would spread (A/B med-of-3: 0.97 vs
     # 1.07 s), unlike the tokenize-heavy CMS stream
-    stream = _file_stream(spark, sf_dir, "events", "hllstream",
+    stream = _file_stream(spark, sf_dir, "events",
                           nanos=True, spread=False)
     regs = hll_portable_registers(stream.select("user_id"), "user_id")
     return (run_bounded(regs, spark, mode="complete", prefix="cm")
@@ -3925,7 +3823,7 @@ def q_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # spread=False: same cheap-map shape as stream_hll (A/B: 0.88 vs
     # 1.01 s med-of-3) — only the tokenize-heavy CMS stream spreads
-    stream = _file_stream(spark, sf_dir, "events", "mdqstream",
+    stream = _file_stream(spark, sf_dir, "events",
                           nanos=True, spread=False)
     regs = mdq_bucket_registers(stream.select("event_id", "value"),
                                 "value", n_buckets=64,
@@ -4886,57 +4784,19 @@ EXTENSION_CHECKS["weighted_sample"] = (q_weighted_sample,
 
 # --- X88: IVF index persistence + serving (build-once/query-many) ----------
 
-#: bump when build_ivf_index's layout/quantization changes — part of
-#: the cache key so a code change can never serve a stale index
-_IVF_BUILDER_VERSION = 1
+#: build parameters of every cached IVF index; with the builder version
+#: they form the fixture tags — bump the ``v1`` when build_ivf_index's
+#: layout or quantization changes
 _IVF_BUILD_PARAMS = {"n_cells": 8, "n_iter": 2}
+_IVF_TAG = "v1_" + "_".join(f"{k}{v}" for k, v
+                            in sorted(_IVF_BUILD_PARAMS.items()))
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF index for ``sf_dir`` once (idempotent; the
-    :func:`ensure_pq_index` protocol — mtime/size/params/version
-    fingerprint, pid-unique temp build, atomic-rename publish,
-    dead-builder GC)."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..operators import similarity as S_
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    params = "|".join(f"{k}={v}" for k, v
-                      in sorted(_IVF_BUILD_PARAMS.items()))
-    key = hashlib.md5(
-        f"{os.path.normpath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|v{_IVF_BUILDER_VERSION}|{params}".encode()).hexdigest()[:12]
-    path = f"/tmp/spark_graft_ivf_index_{key}"
-    marker = os.path.join(path, "centroids", "_SUCCESS")
-    if not os.path.exists(marker):
-        base = os.path.dirname(path) or "."
-        prefix = os.path.basename(path) + ".build."
-        for stale in os.listdir(base):
-            if not stale.startswith(prefix):
-                continue
-            try:
-                pid = int(stale[len(prefix):])
-                os.kill(pid, 0)
-            except (ValueError, ProcessLookupError):
-                shutil.rmtree(os.path.join(base, stale),
-                              ignore_errors=True)
-            except PermissionError:
-                pass
-        tmp = f"{path}.build.{os.getpid()}"
-        S_.build_ivf_index(_emb(spark, sf_dir), tmp, **_IVF_BUILD_PARAMS)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(marker):
-                raise RuntimeError(
-                    f"IVF index publish failed and no complete index "
-                    f"exists at {path}") from None
-    return path
+    :func:`ensure_pq_index` cache rule)."""
+    return fixture_dir(sf_dir, f"ivf_index_{_IVF_TAG}", lambda out: (
+        S.build_ivf_index(_emb(spark, sf_dir), out, **_IVF_BUILD_PARAMS)))
 
 
 def q_sim_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5126,46 +4986,28 @@ EXTENSION_CHECKS["dedup_url"] = (q_dedup_url, ORACLE_DEDUP_URL)
 
 # --- X92: incremental IVF index append (frozen codebook) --------------------
 
+def _build_ivf_appended(spark: SparkSession, sf_dir: str, out: str) -> None:
+    """Build the IVF index on the original corpus at ``out``, then
+    append rotated copies (disjoint ids) with the frozen codebook."""
+    emb = _emb(spark, sf_dir)
+    S.build_ivf_index(emb, out, **_IVF_BUILD_PARAMS)
+    rotated = emb.select(
+        (F.col("vec_id") + 1000000).alias("vec_id"),
+        F.concat(
+            F.slice(F.transform("embedding",
+                                lambda x: x.cast("double")), 2, 63),
+            F.slice(F.transform("embedding",
+                                lambda x: x.cast("double")), 1, 1))
+        .alias("embedding"))
+    S.append_ivf_index(rotated, out)
+
+
 def ensure_ivf_append_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-on-originals + append-rotated-copies index for the
-    sim_ivf_append check (idempotent; same publish protocol family as
-    :func:`ensure_ivf_index` — build in a pid-unique temp dir, atomic
-    rename)."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..operators import similarity as S_
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.normpath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|ivfappend|v1".encode()).hexdigest()[:12]
-    path = f"/tmp/spark_graft_ivf_append_{key}"
-    marker = os.path.join(path, "_APPENDED")
-    if not os.path.exists(marker):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        emb = _emb(spark, sf_dir)
-        S_.build_ivf_index(emb, tmp, n_cells=8, n_iter=2)
-        rotated = emb.select(
-            (F.col("vec_id") + 1000000).alias("vec_id"),
-            F.concat(
-                F.slice(F.transform("embedding",
-                                    lambda x: x.cast("double")), 2, 63),
-                F.slice(F.transform("embedding",
-                                    lambda x: x.cast("double")), 1, 1))
-            .alias("embedding"))
-        S_.append_ivf_index(rotated, tmp)
-        open(os.path.join(tmp, "_APPENDED"), "w").close()
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(marker):
-                raise
-    return path
+    sim_ivf_append check (idempotent; the :func:`ensure_pq_index` cache
+    rule)."""
+    return fixture_dir(sf_dir, f"ivf_append_{_IVF_TAG}", lambda out: (
+        _build_ivf_appended(spark, sf_dir, out)))
 
 
 def q_sim_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5249,42 +5091,10 @@ def ensure_ivf_compact_index(spark: SparkSession, sf_dir: str) -> str:
     append rotated copies (many small files), compact.  Serving must
     be bit-identical through the rewrite, so the check reuses
     ORACLE_SIM_IVF_APPEND verbatim."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..operators import similarity as S_
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.normpath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|ivfcompact|v1".encode()).hexdigest()[:12]
-    path = f"/tmp/spark_graft_ivf_compact_{key}"
-    marker = os.path.join(path, "_COMPACTED")
-    if not os.path.exists(marker):
-        tmp = f"{path}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        emb = _emb(spark, sf_dir)
-        S_.build_ivf_index(emb, tmp, n_cells=8, n_iter=2)
-        rotated = emb.select(
-            (F.col("vec_id") + 1000000).alias("vec_id"),
-            F.concat(
-                F.slice(F.transform("embedding",
-                                    lambda x: x.cast("double")), 2, 63),
-                F.slice(F.transform("embedding",
-                                    lambda x: x.cast("double")), 1, 1))
-            .alias("embedding"))
-        S_.append_ivf_index(rotated, tmp)
-        S_.compact_ivf_index(spark, tmp)
-        open(os.path.join(tmp, "_COMPACTED"), "w").close()
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(marker):
-                raise
-    return path
+    def build(out):
+        _build_ivf_appended(spark, sf_dir, out)
+        S.compact_ivf_index(spark, out)
+    return fixture_dir(sf_dir, f"ivf_compact_{_IVF_TAG}", build)
 
 
 def q_sim_ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,7 +25,7 @@ import hashlib
 
 from ..functions import chaintime as ct
 from ..operators.load import compute_meta, ctas as ctas_op, derive_block_date
-from ..sources.testdata import load_table
+from ..sources.testdata import fixture_dir, load_table
 
 # mid-range execution date over the events table (2024-01-01..2024-01-30)
 DS = "2024-01-15"
@@ -48,35 +48,17 @@ def _millis(col: str) -> F.Column:
 
 # --- S1/S2: NDJSON schema-enforced scan (round-trip through staging) ------
 
-def _staged(sf_dir: str, tag: str) -> str:
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"e2etl_{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
-
-
-def _is_staged(path: str) -> bool:
-    import os
-
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
 def ensure_ndjson_staged(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the NDJSON staging fixture (idempotent per sf_dir):
     events with an injected unknown key, serialized as NDJSON.  Exposed
     so bench can run the one-off staging write in warm-up — the timed
     check then measures the imposed-schema scan, not the fixture write."""
-    out = _staged(sf_dir, "ndjson")
-    if not _is_staged(out):
-        ev = _events(spark, sf_dir)
-        # stage with an extra column the imposed schema doesn't know about
-        (ev.withColumn("extra_unknown", F.lit("drop-me"))
-           .selectExpr("event_id", "CAST(ts AS STRING) AS ts", "user_id",
-                       "event_type", "value", "extra_unknown")
-           .write.mode("overwrite").json(out))
-    return out
+    # stage with an extra column the imposed schema doesn't know about
+    return fixture_dir(sf_dir, "ndjson", lambda out: (
+        _events(spark, sf_dir).withColumn("extra_unknown", F.lit("drop-me"))
+        .selectExpr("event_id", "CAST(ts AS STRING) AS ts", "user_id",
+                    "event_type", "value", "extra_unknown")
+        .write.json(out)))
 
 
 def q_scan_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,13 +100,10 @@ def ensure_csv_staged(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the CSV staging fixture (idempotent per sf_dir):
     documents serialized as headered CSV — the TSV/CSV drop a crawl or
     vendor feed arrives as.  Bench warm-up hook like the NDJSON one."""
-    out = _staged(sf_dir, "csv")
-    if not _is_staged(out):
-        d = load_table(spark, sf_dir, "documents")
-        (d.select("doc_id", "text", "lang", "source", "n_chars")
-         .write.mode("overwrite").option("header", True)
-         .option("quoteAll", False).csv(out))
-    return out
+    return fixture_dir(sf_dir, "csv", lambda out: (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .write.option("header", True).option("quoteAll", False).csv(out)))
 
 
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,13 +144,11 @@ def ensure_xml_staged(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the XML staging fixture (idempotent per sf_dir):
     documents serialized as row-tagged XML — the feed/sitemap/API-dump
     shape.  Bench warm-up hook like the CSV one."""
-    out = _staged(sf_dir, "xml")
-    if not _is_staged(out):
-        d = load_table(spark, sf_dir, "documents")
-        (d.select("doc_id", "text", "lang", "source", "n_chars")
-         .write.mode("overwrite").format("xml")
-         .option("rootTag", "docs").option("rowTag", "doc").save(out))
-    return out
+    return fixture_dir(sf_dir, "xml", lambda out: (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .write.format("xml")
+        .option("rootTag", "docs").option("rowTag", "doc").save(out)))
 
 
 def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,12 +188,9 @@ FROM documents GROUP BY lang ORDER BY lang
 def ensure_orc_staged(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the ORC staging fixture (idempotent per sf_dir) —
     the other columnar format a lake ingests; bench warm-up hook."""
-    out = _staged(sf_dir, "orc")
-    if not _is_staged(out):
-        (load_table(spark, sf_dir, "documents")
-         .select("doc_id", "lang", "source", "n_chars")
-         .write.mode("overwrite").orc(out))
-    return out
+    return fixture_dir(sf_dir, "orc", lambda out: (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "source", "n_chars").write.orc(out)))
 
 
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,12 +218,9 @@ def ensure_avro_staged(spark: SparkSession, sf_dir: str) -> str:
     one file per partition, deflate blocks, nullable-union + date
     logical-type columns — the BigQuery-load interchange shape
     (`build_load_dag.py:81` family) without the spark-avro jar."""
-    import os
-
     from ..sources.avro import write_avro
 
-    out = _staged(sf_dir, "avro")
-    if not os.path.exists(os.path.join(out, "part-00000.avro")):
+    def build(out):
         d = load_table(spark, sf_dir, "documents")
         (write_avro(
             d.select(
@@ -263,7 +234,7 @@ def ensure_avro_staged(spark: SparkSession, sf_dir: str) -> str:
                            (F.col("doc_id") % 100).cast("int"))
                 .alias("d"))
             .repartition(4), out, codec="deflate"))
-    return out
+    return fixture_dir(sf_dir, "avro", build)
 
 
 def q_scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,19 +271,14 @@ def ensure_evolved_staged(spark: SparkSession, sf_dir: str) -> str:
     """Two parquet file generations with EVOLVED schemas (idempotent):
     generation 1 lacks the later ``lang`` column — the drop-a-column /
     add-a-column lifecycle every long-lived lake table goes through."""
-    import os
-
-    out = _staged(sf_dir, "evolve")
-    if not os.path.exists(os.path.join(out, "_SUCCESS2")):
+    def build(out):
         d = load_table(spark, sf_dir, "documents")
         (d.where(F.col("doc_id") % 2 == 0)
-         .select("doc_id", "n_chars")
-         .write.mode("overwrite").parquet(out))
+         .select("doc_id", "n_chars").write.parquet(out))
         (d.where(F.col("doc_id") % 2 == 1)
          .select("doc_id", "n_chars", "lang")
          .write.mode("append").parquet(out))
-        open(os.path.join(out, "_SUCCESS2"), "w").close()
-    return out
+    return fixture_dir(sf_dir, "evolve", build)
 
 
 def q_scan_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,11 +308,9 @@ FROM documents GROUP BY 1 ORDER BY lang
 def ensure_partition_staged(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the Hive `block_date=` partitioned fixture (idempotent
     per sf_dir) — S5+S6 write semantics; bench warm-up hook."""
-    out = _staged(sf_dir, "part")
-    if not _is_staged(out):
-        ev = derive_block_date(_events(spark, sf_dir), "ts")
-        ev.write.mode("overwrite").partitionBy("block_date").parquet(out)
-    return out
+    return fixture_dir(sf_dir, "part", lambda out: (
+        derive_block_date(_events(spark, sf_dir), "ts")
+        .write.partitionBy("block_date").parquet(out)))
 
 
 def q_scan_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -376,13 +340,14 @@ def ensure_overwrite_sink(spark: SparkSession, sf_dir: str) -> str:
     sf_dir): a stale 10-row write fully replaced by the real table —
     WRITE_TRUNCATE semantics (`build_load_dag.py:82`).  The read side of
     the check proves the replacement (full row count, no stale rows);
-    `tests/test_load_verify.py` exercises the overwrite on fresh dirs."""
-    out = _staged(sf_dir, "ovw")
-    if not _is_staged(out):
+    `tests/test_load_verify.py` exercises the overwrite on fresh dirs.
+    Both writes happen before the atomic publish, so a crash between
+    them leaves no fixture to serve."""
+    def build(out):
         ev = _events(spark, sf_dir)
-        ev.limit(10).write.mode("overwrite").parquet(out)  # stale content
-        ev.write.mode("overwrite").parquet(out)            # truncate-replace
-    return out
+        ev.limit(10).write.parquet(out)              # stale content
+        ev.write.mode("overwrite").parquet(out)      # truncate-replace
+    return fixture_dir(sf_dir, "ovw", build)
 
 
 def q_sink_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,14 +42,16 @@ def oracle_sqls() -> dict[str, str]:
 def ensure_all(spark, sf_dir: str) -> list[str]:
     """Materialize every staged fixture the checks read for ``sf_dir``:
     stream sources, served index artifacts and staged files in other
-    formats.  Each ``ensure_*`` is idempotent per ``sf_dir``, so callers
-    run this once before timing checks and keep one-off fixture writes
-    out of the timed window.  A failing fixture does not stop the
+    formats.  Each ``ensure_*`` builds its fixture once per ``sf_dir``
+    through ``sources.testdata.fixture_dir``, so callers run this once
+    before timing checks and keep one-off fixture writes out of the
+    timed window.  A failing fixture does not stop the
     others; the result holds one ``"<fixture>: <first error line>"``
     per failure."""
     from .checks_extension import (
-        ensure_ivf_index, ensure_pq_index, ensure_sessionize_source,
-        ensure_stream_join_outer_source)
+        ensure_dedup_stream_source, ensure_ivf_append_index,
+        ensure_ivf_compact_index, ensure_ivf_index, ensure_pq_index,
+        ensure_sessionize_source, ensure_stream_join_outer_source)
     from .checks_reference import (
         ensure_avro_staged, ensure_csv_staged, ensure_evolved_staged,
         ensure_ndjson_staged, ensure_orc_staged, ensure_overwrite_sink,
@@ -57,7 +59,9 @@ def ensure_all(spark, sf_dir: str) -> list[str]:
 
     errors = []
     for fix in (ensure_sessionize_source, ensure_stream_join_outer_source,
-                ensure_pq_index, ensure_ivf_index, ensure_ndjson_staged,
+                ensure_dedup_stream_source, ensure_pq_index,
+                ensure_ivf_index, ensure_ivf_append_index,
+                ensure_ivf_compact_index, ensure_ndjson_staged,
                 ensure_csv_staged, ensure_orc_staged, ensure_evolved_staged,
                 ensure_partition_staged, ensure_overwrite_sink,
                 ensure_xml_staged, ensure_avro_staged):

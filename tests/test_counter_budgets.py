@@ -1,5 +1,5 @@
 """Per-check Spark job and stage budgets, read through
-``tools/profile.py``: an added barrier (an eager ``collect()``, a new
+``tools/measure.py``: an added barrier (an eager ``collect()``, a new
 exchange) fails here instead of hiding in wall-time noise.
 
 Budgets are the larger of the counts measured at ``local[4]`` and
@@ -34,7 +34,7 @@ BUDGETS = {
 
 
 def test_checks_stay_within_counter_budgets(spark, sf_dir):
-    from tools.profile import profile
+    from tools.measure import profile
 
     over = {}
     for rec in profile(spark, list(BUDGETS), sf_dir, 1):

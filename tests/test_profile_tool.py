@@ -1,4 +1,4 @@
-"""The measurement path: ``tools/profile.py`` records per check, read
+"""The measurement path: ``tools/measure.py`` records per check, read
 from Spark's status stores rather than from a job group."""
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ def _job_group_count(spark, name, sf_dir):
 
 
 def test_profile_records_carry_counters(spark, sf_dir):
-    from tools.profile import profile
+    from tools.measure import profile
 
     recs = profile(spark, ["sort_limit", "sessionize_stream"], sf_dir, 1)
     assert [r["check"] for r in recs] == ["sort_limit", "sessionize_stream"]
@@ -47,7 +47,7 @@ def test_profile_records_carry_counters(spark, sf_dir):
 
 
 def test_profile_reports_unknown_check(spark, sf_dir):
-    from tools.profile import profile
+    from tools.measure import profile
 
     (rec,) = profile(spark, ["no_such_check"], sf_dir, 0)
     assert rec["check"] == "no_such_check" and "error" in rec

@@ -1,6 +1,6 @@
 """Per-check records read from Spark's own status stores.
 
-    python tools/profile.py --sf-dirs DIR[,DIR...] [--cpus 2,4] [--reps 3] \
+    python tools/measure.py --sf-dirs DIR[,DIR...] [--cpus 2,4] [--reps 3] \
         bpe_merges sessionize_stream ...
 
 For each (sf dir, cpus) pair the tool builds one session at
@@ -35,21 +35,9 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-if __name__ == "profile":
-    # Any script run from tools/ has tools/ at the head of sys.path, so
-    # the stdlib ``profile`` that cProfile imports (and pyspark imports
-    # cProfile) resolves to this file: load the real module in its place.
-    import importlib.util
-    import sysconfig
-
-    _spec = importlib.util.spec_from_file_location(
-        "profile", os.path.join(sysconfig.get_path("stdlib"), "profile.py"))
-    sys.modules["profile"] = importlib.util.module_from_spec(_spec)
-    _spec.loader.exec_module(sys.modules["profile"])
-else:
-    sys.path.insert(0, REPO)
-    sys.path.append(os.path.join(REPO, "perfbench"))
-    from tracing import SparkCounters
+sys.path.insert(0, REPO)
+sys.path.append(os.path.join(REPO, "perfbench"))
+from tracing import SparkCounters  # noqa: E402
 
 COUNTER_KEYS = ("jobs", "stages", "tasks", "shuffle_write_bytes",
                 "spill_bytes", "python_bytes", "broadcast_build_s",
